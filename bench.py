@@ -335,7 +335,7 @@ def main() -> None:
             # ordinary (driver) passes write the gitignored *_last
             # artifact; PSE_BENCH_COMMIT=1 refreshes the tracked one
             "--suffix",
-            "" if os.environ.get("PSE_BENCH_COMMIT") else "_last",
+            "" if os.environ.get("PSE_BENCH_COMMIT") == "1" else "_last",
             # reuse a prior build when present: the 26M build is ~9 min
             # and identical across runs (deterministic generator), and
             # skipping it shrinks the window where this 32g subprocess
@@ -398,7 +398,7 @@ def main() -> None:
     # full-fidelity record: to disk and as the FIRST stdout line
     detail_name = (
         "bench_detail.json"
-        if os.environ.get("PSE_BENCH_COMMIT")
+        if os.environ.get("PSE_BENCH_COMMIT") == "1"
         else "bench_detail_last.json"  # gitignored; driver passes land here
     )
     detail_path = os.path.join(

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..plans.session import local_frame
 from .indexer import B, K1, InvertedIndex
 from .query import _live, _postings_for
 
@@ -43,7 +44,7 @@ def _query_table(index: InvertedIndex, queries: dict[int, list[str]]) -> DataFra
             qtf[t] = qtf.get(t, 0) + 1
         rows += [(int(qid), t, float(n)) for t, n in sorted(qtf.items())]
     spark = index.postings.sparkSession
-    return spark.createDataFrame(rows, "qid long, term string, qtf double")
+    return local_frame(spark, rows, "qid long, term string, qtf double")
 
 
 def batch_bm25_scores(

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..plans.session import local_frame
+
 
 def rank_eval(runs: DataFrame, qrels: DataFrame, *, k: int = 10) -> DataFrame:
     """Returns one row per judged query:
@@ -95,8 +97,8 @@ def and_qrels(index, queries: dict[int, list[str]]) -> DataFrame:
         for t in sorted(set(_analyzed(index, terms))):
             rows.append((int(qid), t))
     if not rows:
-        return spark.createDataFrame([], "qid int, doc_id long")
-    qdf = spark.createDataFrame(rows, "qid int, term string")
+        return local_frame(spark, [], "qid int, doc_id long")
+    qdf = local_frame(spark, rows, "qid int, term string")
     need = qdf.groupBy("qid").agg(F.count("*").alias("_need"))
     p = _postings_for(index, sorted({t for _, t in rows}))
     hits = p.select(

@@ -37,6 +37,7 @@ from typing import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.session import local_frame
 from .indexer import (
     InvertedIndex,
     _ENC_SCHEMA,
@@ -52,7 +53,7 @@ def _as_tombstone_df(index: InvertedIndex, doc_ids) -> DataFrame:
     if isinstance(doc_ids, DataFrame):
         return doc_ids.select(F.col("doc_id").cast("long")).distinct()
     rows = [(int(d),) for d in sorted(set(doc_ids))]
-    return spark.createDataFrame(rows, "doc_id long")
+    return local_frame(spark, rows, "doc_id long")
 
 
 def delete_documents(

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.analysis import analyze_query
+from ..plans.session import local_frame
 from .indexer import B, K1, InvertedIndex
 
 
@@ -63,7 +64,7 @@ def search_and(index: InvertedIndex, terms: list[str]) -> DataFrame:
     toks = sorted(set(_analyzed(index, terms)))
     spark = index.postings.sparkSession
     if not toks:
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, [], "doc_id long")
     p = _postings_for(index, toks)
     hits = p.select("term", F.explode("doc_ids").alias("doc_id"))
     return _live(
@@ -79,7 +80,7 @@ def search_keyword(index: InvertedIndex, keyword: str) -> DataFrame:
     """Q1: analyze the keyword (may produce several tokens) and AND
     them; empty/blank string -> empty result (IIM:305-307)."""
     if not keyword.strip():
-        return index.postings.sparkSession.createDataFrame([], "doc_id long")
+        return local_frame(index.postings.sparkSession, [], "doc_id long")
     return search_and(index, [keyword])
 
 
@@ -88,7 +89,7 @@ def search_or(index: InvertedIndex, terms: list[str]) -> DataFrame:
     toks = sorted(set(_analyzed(index, terms)))
     spark = index.postings.sparkSession
     if not toks:
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, [], "doc_id long")
     p = _postings_for(index, toks)
     return _live(index, p.select(F.explode("doc_ids").alias("doc_id")).distinct())
 
@@ -135,7 +136,7 @@ def search_prefix(index: InvertedIndex, prefix: str) -> DataFrame:
     pfx = prefix.strip().lower()
     spark = index.postings.sparkSession
     if not pfx:
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, [], "doc_id long")
     p = index.postings.filter(F.col("term").startswith(pfx))
     return _live(index, p.select(F.explode("doc_ids").alias("doc_id")).distinct())
 
@@ -145,7 +146,7 @@ def _docs_for_terms(index: InvertedIndex, terms: list[str]) -> DataFrame:
     terms — the shared tail of every dictionary-expansion query."""
     spark = index.postings.sparkSession
     if not terms:
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, [], "doc_id long")
     p = _postings_for(index, terms)
     return _live(index, p.select(F.explode("doc_ids").alias("doc_id")).distinct())
 
@@ -200,7 +201,7 @@ def search_fuzzy(
     q = term.strip().lower()
     spark = index.postings.sparkSession
     if not q:
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, [], "doc_id long")
     return _expand_or_distribute(
         index,
         F.levenshtein(F.col("term"), F.lit(q)) <= max_dist,
@@ -228,7 +229,7 @@ def search_wildcard(
     pat = pattern.strip().lower()
     spark = index.postings.sparkSession
     if not pat or pat.strip("*") == "":
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, [], "doc_id long")
     like = pat.replace("%", r"\%").replace("_", r"\_").replace("*", "%")
     return _expand_or_distribute(
         index, F.col("term").like(like), max_expansions
@@ -281,7 +282,7 @@ def suggest_terms(index: InvertedIndex, prefix: str, top_k: int = 10) -> DataFra
     pfx = prefix.strip().lower()
     spark = index.postings.sparkSession
     if not pfx:
-        return spark.createDataFrame([], "term string, df long")
+        return local_frame(spark, [], "term string, df long")
     return (
         index.term_stats.filter(F.col("term").startswith(pfx))
         .select("term", "df")
@@ -315,7 +316,7 @@ def search_phrase(index: InvertedIndex, phrase: list[str]) -> DataFrame:
     toks = _analyzed(index, phrase)
     spark = index.postings.sparkSession
     if not toks:
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, [], "doc_id long")
     per_term = _per_term_positions(index, toks)
     return _live(index, _phrase_join(per_term, toks))
 
@@ -365,7 +366,7 @@ def search_proximity(
     toks = sorted(set(_analyzed(index, terms)))
     spark = index.postings.sparkSession
     if not toks:
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, [], "doc_id long")
     per_term = _per_term_positions(index, toks)
     parts = []
     for j, t in enumerate(toks):
@@ -480,7 +481,7 @@ def suggest_spelling(
     q = term.strip().lower()
     spark = index.postings.sparkSession
     if not q:
-        return spark.createDataFrame([], "term string, df long, dist int")
+        return local_frame(spark, [], "term string, df long, dist int")
     return (
         index.term_stats
         .withColumn("dist", F.levenshtein(F.col("term"), F.lit(q)))
@@ -559,6 +560,20 @@ def _phrase_join(per_term: DataFrame, toks: list[str]) -> DataFrame:
 
 # -- Q5-Q8: TF-IDF (reference semantics) --------------------------------------
 
+def _weighted_terms(index: InvertedIndex, weights: dict[str, float]) -> DataFrame:
+    """The query terms' ``term_stats`` rows, each with its query weight
+    as ``qtf``. The weights ride along as a literal map rather than a
+    joined query-term table: joining even a one-row local table costs
+    every query a broadcast job of its own. Terms absent from the
+    dictionary drop out, as an inner join would drop them."""
+    qtf = F.create_map(
+        *[F.lit(x) for t, w in sorted(weights.items()) for x in (t, float(w))]
+    )
+    return index.term_stats.filter(F.col("term").isin(sorted(weights))).withColumn(
+        "qtf", qtf[F.col("term")]
+    )
+
+
 def tfidf_scores(index: InvertedIndex, terms: list[str]) -> DataFrame:
     """Q5-Q8 exact reference semantics: idf = log10(N/df) (IIM:567);
     query weight = query-token-count × idf (IIM:671-689); score =
@@ -567,17 +582,14 @@ def tfidf_scores(index: InvertedIndex, terms: list[str]) -> DataFrame:
     toks = _analyzed(index, terms)
     spark = index.postings.sparkSession
     if not toks:
-        return spark.createDataFrame([], "doc_id long, score double")
-    qtf: dict[str, int] = {}
+        return local_frame(spark, [], "doc_id long, score double")
+    qtf: dict[str, float] = {}
     for t in toks:
-        qtf[t] = qtf.get(t, 0) + 1
-    qdf = spark.createDataFrame(
-        [(t, float(n)) for t, n in sorted(qtf.items())], "term string, qtf double"
-    )
+        qtf[t] = qtf.get(t, 0.0) + 1.0
     n_docs = float(index.n_docs)
     # idf from GLOBAL term stats (pass 1, IIM:543-569)
     idf = (
-        index.term_stats.join(F.broadcast(qdf), "term")
+        _weighted_terms(index, qtf)
         .withColumn("idf", F.log10(F.lit(n_docs) / F.col("df")))
         .select("term", "qtf", "idf")
     )
@@ -620,13 +632,9 @@ def bm25_scores_weighted(
     b=0.75; idf = ln(1+(N-df+.5)/(df+.5)). Returns (doc_id, score)."""
     spark = index.postings.sparkSession
     if not weights:
-        return spark.createDataFrame([], "doc_id long, score double")
-    qdf = spark.createDataFrame(
-        [(t, float(w)) for t, w in sorted(weights.items())],
-        "term string, qtf double",
-    )
+        return local_frame(spark, [], "doc_id long, score double")
     idf = (
-        index.term_stats.join(F.broadcast(qdf), "term")
+        _weighted_terms(index, weights)
         .withColumn("idf", index.bm25_idf_col())
         .select("term", "qtf", "idf")
     )
@@ -736,17 +744,12 @@ def full_scan_search(corpus: DataFrame, terms: list[str], *, stem: bool = True) 
 
     toks = sorted(set(analyze_query(terms, stem=stem)))
     if not toks:
-        return corpus.sparkSession.createDataFrame([], "doc_id long")
+        return local_frame(corpus.sparkSession, [], "doc_id long")
     t = tokenize_corpus(corpus, stem=stem)
     cond = reduce(
         lambda acc, tok: acc & F.array_contains("tokens", tok), toks, F.lit(True)
     )
     return t.filter(cond).select("doc_id")
-
-
-def fetch_documents(corpus: DataFrame, doc_ids: DataFrame) -> DataFrame:
-    """DocStore point-lookup analogue (B10): join back to text."""
-    return doc_ids.join(corpus, "doc_id").select("doc_id", "text")
 
 
 def snippets(
@@ -774,7 +777,7 @@ def snippets(
     toks = sorted(set(analyze_query(terms, stem=stem)))
     spark = corpus.sparkSession
     if not toks:
-        return spark.createDataFrame([], "doc_id long, snippet string")
+        return local_frame(spark, [], "doc_id long, snippet string")
     hits = corpus.join(doc_ids.select("doc_id"), "doc_id", "left_semi")
     t = tokenize_corpus(hits, stem=stem)
     # 1-based first position of any query term; array_position = 0

@@ -30,8 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.session import local_frame
 from .indexer import B, K1, InvertedIndex
-from .query import _analyzed, _live, _postings_for, top_k_df
+from .query import _analyzed, _live, _postings_for, _weighted_terms, top_k_df
 
 # head field = analyzed-token positions [0, HEAD_LEN); weights are the
 # classic title-boost shape.
@@ -73,15 +74,12 @@ def bm25f_scores(
     toks = _analyzed(index, terms)
     spark = index.postings.sparkSession
     if not toks:
-        return spark.createDataFrame([], "doc_id long, score double")
-    qtf: dict[str, int] = {}
+        return local_frame(spark, [], "doc_id long, score double")
+    qtf: dict[str, float] = {}
     for t in toks:
-        qtf[t] = qtf.get(t, 0) + 1
-    qdf = spark.createDataFrame(
-        [(t, float(n)) for t, n in sorted(qtf.items())], "term string, qtf double"
-    )
+        qtf[t] = qtf.get(t, 0.0) + 1.0
     idf = (
-        index.term_stats.join(F.broadcast(qdf), "term")
+        _weighted_terms(index, qtf)
         .withColumn("idf", index.bm25_idf_col())
         .select("term", "qtf", "idf")
     )
@@ -197,7 +195,7 @@ def more_like_this(
     )
     terms = [r["term"] for r in sel.collect()]  # O(max_terms) planner state
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, [], "doc_id long, score double")
     scored = bm25_scores(index, terms).filter(F.col("doc_id") != doc_id)
     return top_k_df(scored, top_k)
 
@@ -238,7 +236,7 @@ def search_rm3(
     spark = corpus.sparkSession
     toks = _analyzed(index, terms)
     if not toks:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, [], "doc_id long, score double")
     fb_rows = (
         bm25_scores(index, terms)
         .withColumn("score_e6", F.round(F.col("score") * 1_000_000).cast("long"))
@@ -247,8 +245,9 @@ def search_rm3(
         .collect()
     )
     if not fb_rows:
-        return spark.createDataFrame([], "doc_id long, score double")
-    fb = spark.createDataFrame(
+        return local_frame(spark, [], "doc_id long, score double")
+    fb = local_frame(
+        spark,
         [(r["doc_id"], r["score_e6"]) for r in fb_rows],
         "doc_id long, score_e6 long",
     )
@@ -309,7 +308,7 @@ def lm_dirichlet_scores(
     toks = _analyzed(index, terms)
     spark = index.postings.sparkSession
     if not toks:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, [], "doc_id long, score double")
     qtf: dict[str, int] = {}
     for t in toks:
         qtf[t] = qtf.get(t, 0) + 1
@@ -324,12 +323,13 @@ def lm_dirichlet_scores(
 
     live = {t: n for t, n in qtf.items() if stats.get(t, 0) > 0}
     if not live:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, [], "doc_id long, score double")
     k_const = sum(
         n * math.log(mu * stats[t] / total_c) for t, n in live.items()
     )
     q_total = float(sum(live.values()))
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(t, float(n), float(stats[t]) / total_c) for t, n in sorted(live.items())],
         "term string, qtf double, pc double",
     )

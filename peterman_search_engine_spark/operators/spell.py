@@ -41,6 +41,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.session import local_frame
 from .indexer import InvertedIndex
 from .query import (
     DEFAULT_MAX_EXPANSIONS,
@@ -189,7 +190,7 @@ def suggest_spelling_indexed(
     q = term.strip().lower()
     spark = spell.df.sparkSession
     if not q:
-        return spark.createDataFrame([], "term string, df long, dist int")
+        return local_frame(spark, [], "term string, df long, dist int")
     return (
         spell_candidates(spell, q)
         .filter((F.col("dist") <= max_dist) & (F.col("term") != q))
@@ -217,7 +218,7 @@ def search_fuzzy_indexed(
     q = term.strip().lower()
     spark = index.postings.sparkSession
     if not q:
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, [], "doc_id long")
     cand = spell_candidates(spell, q).filter(F.col("dist") <= max_dist)
     terms = [
         r["term"] for r in cand.select("term").limit(max_expansions + 1).collect()

@@ -72,6 +72,7 @@ from pyspark.sql import functions as F
 
 from ..functions.analysis import analyze_query
 from ..functions.codec import delta_varint_decode
+from ..plans.session import local_frame
 from .indexer import B, K1, InvertedIndex
 from .query import bm25_scores, top_k_df
 
@@ -187,9 +188,13 @@ def bm25_topk_wand(
     """
     toks = analyze_query(terms, stem=index.stem)
     spark = index.postings.sparkSession
-    empty = spark.createDataFrame([], "doc_id long, score double")
+
+    def _empty(stats: dict):
+        empty = local_frame(spark, [], "doc_id long, score double")
+        return (empty, stats) if return_stats else empty
+
     if not toks:
-        return (empty, {}) if return_stats else empty
+        return _empty({})
     qtf = _qtf(toks)
     if block_size is None:
         block_size = index.block_size
@@ -237,10 +242,10 @@ def bm25_topk_wand(
         for r in trows
     }
     if not w:
-        return (empty, {"est_entries": 0}) if return_stats else empty
+        return _empty({"est_entries": 0})
     qterms = sorted(w)
     wdf = F.broadcast(
-        spark.createDataFrame(sorted(w.items()), "term string, w double")
+        local_frame(spark, sorted(w.items()), "term string, w double")
     )
 
     p = index.postings.filter(F.col("term").isin(qterms))
@@ -452,7 +457,8 @@ def bm25_topk_wand(
     # exactly one segment — the seed rows and resc are disjoint, union
     # only (the seed top-k is k driver-held rows, re-injected as a
     # local relation)
-    seed_df = spark.createDataFrame(
+    seed_df = local_frame(
+        spark,
         [(r["doc_id"], r["score"]) for r in seed_rows],
         "doc_id long, score double",
     )

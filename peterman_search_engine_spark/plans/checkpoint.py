@@ -43,6 +43,7 @@ from ..operators.indexer import (
     InvertedIndex,
     postings_from_corpus,
 )
+from .session import local_frame
 from .storage import TableStore
 
 
@@ -274,7 +275,8 @@ def metrics_df(spark: SparkSession, index_dir: str) -> DataFrame:
     """The lineage manifest as a DataFrame — per checkpoint group:
     record counts, bytes, wall seconds (auditability surface)."""
     rows = list(_read_manifest(index_dir).values())
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 r["group"], r["doc_id_lo"], r["doc_id_hi"], r["posting_rows"],

@@ -1,15 +1,21 @@
-"""SparkSession factory with scale-appropriate defaults.
+"""SparkSession factory with scale-appropriate defaults, and the
+driver-side table builder every operator uses for small literal tables.
 
-The same builder is used by tests (local[32]), bench.py, and the
-spark-submit jobs; on a real cluster the master/memory settings come
-from spark-submit and only the SQL conf below applies.
+The same builder is used by tests and bench.py (``local[<cores>]``,
+cores from ``SPARK_GRAFT_CPUS`` or the process's CPU affinity) and by
+the spark-submit jobs; on a real cluster the master/memory settings
+come from spark-submit and only the SQL conf below applies.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -18,10 +24,13 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cores = str(len(os.sched_getaffinity(0)))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or cores
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("PSE_SHUFFLE_PARTITIONS", cpus if cpus.isdigit() else "32"))
+        shuffle_partitions = int(
+            os.environ.get("PSE_SHUFFLE_PARTITIONS", cpus if cpus.isdigit() else cores)
+        )
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -43,3 +52,28 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("PSE_UI", "false"))
     )
     return b.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], ddl: str
+) -> DataFrame:
+    """A driver-held table of ``rows`` (tuples in ``ddl`` column order)
+    as a JVM ``LocalRelation`` — for query-term tables, seed rows and
+    empty results.
+
+    ``spark.createDataFrame(list, ddl)`` parallelizes the rows into a
+    Python-worker RDD (``LogicalRDD``): every query that joins it
+    launches Python tasks on ``defaultParallelism`` partitions to
+    un-pickle a handful of rows, then broadcasts them. An Arrow table
+    is converted JVM-side into a ``LocalRelation`` at any size,
+    including zero rows, independent of the
+    ``spark.sql.execution.arrow.pyspark.enabled`` conf and with no
+    fallback to the pickled path, so the optimizer sees literal rows
+    and the table never costs a job of its own."""
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

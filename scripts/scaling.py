@@ -453,18 +453,22 @@ def main() -> None:
     # section. Without this, every scaling run silently deleted
     # prose added to BASELINE.md by hand.
     hand_blocks = ""
-    try:
-        with open(md) as f:
-            old_md = f.read()
-        hand_blocks = "".join(
-            b.rstrip("\n") + "\n\n"
-            for b in re.findall(
-                r"<!-- hand-maintained -->\n.*?<!-- /hand-maintained -->",
+    if os.path.exists(md):
+        try:
+            with open(md) as f:
+                old_md = f.read()
+        except OSError as e:
+            print(f"warning: cannot read {md} ({e}); its hand-maintained "
+                  "blocks are not carried over", file=sys.stderr)
+        else:
+            blocks = re.findall(
+                r"<!-- hand-maintained -->\s*\n.*?<!-- /hand-maintained -->",
                 old_md, re.S,
             )
-        )
-    except OSError:
-        pass
+            if not blocks:
+                print(f"warning: no hand-maintained blocks found in {md}",
+                      file=sys.stderr)
+            hand_blocks = "".join(b.rstrip("\r\n") + "\n\n" for b in blocks)
     with open(md, "w") as f:
         f.write(
             "# BENCH/BASELINE — two-cluster-size scaling evidence\n\n"
