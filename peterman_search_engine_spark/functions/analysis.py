@@ -48,11 +48,6 @@ from .stopwords import STOP_WORDS
 # Reference split set: whitespace + , . ; ? !  (PunctuationTokenizer.java:26-30)
 TOKEN_SPLIT_RE = r"[\s,.;?!]+"
 
-def _stop_array() -> Column:
-    # built lazily: Column construction needs an active SparkContext
-    return F.array(*[F.lit(w) for w in sorted(STOP_WORDS)])
-
-
 def tokens_expr(text: Column | str, *, keep_stopwords: bool = False) -> Column:
     """A1/A2 as a pure Column expression: lowercase, split on the
     reference punctuation set, drop empties (and stop words unless
@@ -66,14 +61,6 @@ def tokens_expr(text: Column | str, *, keep_stopwords: bool = False) -> Column:
         # is 127 string compares per token: ~100x more scan CPU.)
         toks = F.filter(toks, lambda t: ~t.isin(*sorted(STOP_WORDS)))
     return toks
-
-
-def naive_tokens_expr(text: Column | str) -> Column:
-    """A5 NaiveAnalyzer: lowercase whitespace split, empties dropped,
-    stop words KEPT (``analysis/NaiveAnalyzer.java:13-15``)."""
-    col = F.col(text) if isinstance(text, str) else text
-    toks = F.split(F.lower(col), r"\s+")
-    return F.filter(toks, lambda t: t != F.lit(""))
 
 
 def _analyze_py(text: str, stem: bool) -> list[str]:

@@ -15,6 +15,9 @@ Byte-format parity with the reference:
 
 All encode/decode is numpy-vectorized (no per-int Python loops); these
 run inside Arrow pandas UDFs / applyInPandas during segment build.
+Reads of stored position lists decode inside the JVM instead
+(``varint_positions_sql``, a Spark SQL expression), so no query or
+maintenance plan ships position bytes to a Python worker.
 """
 
 from __future__ import annotations
@@ -145,6 +148,32 @@ def delta_varint_decode(blob: bytes, offset: int = 0, length: int | None = None)
     deltas = np.zeros(nvals, dtype=np.int64)
     np.add.at(deltas, gid, contrib)
     return np.cumsum(deltas)
+
+
+def varint_positions_sql(slice_sql: str) -> str:
+    """``delta_varint_decode`` of a binary SQL expression, as Spark SQL
+    text for ``F.expr``: ``array<int>``, null for a null slice, ``[]``
+    for an empty one. The bytes become ints through their hex digits,
+    then one ``aggregate`` folds them over the state ``(out, v, last)``:
+    a byte below 128 ends a value and appends ``last + (v << 7 | b)``;
+    any other byte accumulates ``v = v << 7 | (b & 127)``. The values
+    must fit an int, as position lists do.
+
+    SQL text rather than a ``Column`` builder: the parser builds the
+    whole lambda tree in one call, where the Column API makes hundreds
+    of driver-to-JVM calls per query plan, and text nests inside an
+    enclosing lambda (``indexer.with_positions``)."""
+    return (
+        "aggregate("
+        f"transform(regexp_extract_all(hex({slice_sql}), '..', 0), "
+        "hx -> cast(conv(hx, 16, 10) as int)), "
+        "named_struct('out', cast(array() as array<int>), 'v', 0, 'last', 0), "
+        "(st, bt) -> if(bt < 128, "
+        "named_struct('out', concat(st.out, array(st.last + (shiftleft(st.v, 7) | bt))), "
+        "'v', 0, 'last', st.last + (shiftleft(st.v, 7) | bt)), "
+        "named_struct('out', st.out, 'v', shiftleft(st.v, 7) | (bt & 127), 'last', st.last)), "
+        "st -> st.out)"
+    )
 
 
 def naive_encode(values: np.ndarray | list[int]) -> bytes:

@@ -14,7 +14,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .analysis import tokens_expr
 from .stopwords import STOP_WORDS
 
 # BPE-ish word/number/symbol pieces — mirrors a byte-pair-encoder's
@@ -109,17 +108,12 @@ def redact_pii(text: Column) -> Column:
     return F.regexp_replace(out, PHONE_RE, "<PHONE>")
 
 
-def fingerprint_components(text: Column):
-    """Position-weighted document fingerprint over analyzed tokens
-    (stop words removed, unstemmed — the A1 tokenizer):
-      fp = ( Σ_pos (pos+1) · (md5_long(token) % M) ) % M,  M = 1e9+7.
-    Order-sensitive (swapping two tokens changes fp), parallel-friendly
-    (a plain sum), and exactly SQL-expressible. Returns the token
-    array column; the caller aggregates post-posexplode."""
-    return tokens_expr(text)
-
-
 def fingerprint_term(pos: Column, term: Column) -> Column:
+    """One token's share of the position-weighted document fingerprint
+      fp = ( Σ_pos (pos+1) · (md5_long(token) % M) ) % M,  M = 1e9+7,
+    summed by the caller over posexploded analyzed tokens. Order-
+    sensitive (swapping two tokens changes fp), parallel-friendly (a
+    plain sum), and exactly SQL-expressible."""
     return (pos + 1).cast("long") * (md5_long(term) % F.lit(FP_MOD))
 
 

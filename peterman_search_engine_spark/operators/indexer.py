@@ -65,6 +65,7 @@ from ..functions.codec import (
     block_offsets,
     delta_varint_encode,
     delta_varint_encode_grouped,
+    varint_positions_sql,
 )
 
 K1 = 1.2
@@ -103,43 +104,24 @@ def encode_positions(pos_lists) -> tuple[bytes, np.ndarray]:
     return buf.tobytes(), offs.astype(np.int32)
 
 
-def positions_decode_udf():
-    """pandas UDF (pos_blob, pos_offsets) -> positions array<array<int>>.
-    Used to re-expose the raw position lists of a PERSISTED index (the
-    checkpoint layout stores only the compressed blob); thanks to
-    Catalyst column pruning the decode runs only in plans that actually
-    select `positions` — the phrase path instead partial-decodes single
-    byte slices (operators.query.search_phrase)."""
-    from ..functions.codec import delta_varint_decode
-
-    @F.pandas_udf(ArrayType(ArrayType(IntegerType())))
-    def _dec(blobs: pd.Series, offs: pd.Series) -> pd.Series:
-        out = []
-        for blob, o in zip(blobs, offs):
-            if blob is None or o is None:
-                out.append(None)
-                continue
-            oa = np.asarray(o, dtype=np.int64)
-            out.append(
-                [
-                    delta_varint_decode(
-                        blob, int(oa[i]), int(oa[i + 1] - oa[i])
-                    ).astype(np.int32)
-                    for i in range(len(oa) - 1)
-                ]
-            )
-        return pd.Series(out)
-
-    return _dec
-
-
 def with_positions(postings: DataFrame) -> DataFrame:
     """Ensure a raw `positions` column exists, decoding the compressed
-    blob when the DataFrame came from the persisted layout."""
+    blob when the DataFrame came from the persisted layout. The decode
+    is a JVM expression (``codec.varint_positions_sql`` over each doc's
+    ``pos_offsets`` byte slice), and Catalyst column pruning keeps it
+    out of every plan that does not select `positions`. A null blob
+    gives null; fewer than two offsets give ``[]``."""
     if "positions" in postings.columns:
         return postings
+    per_doc = varint_positions_sql(
+        "substring(pos_blob, pos_offsets[i] + 1, e - pos_offsets[i])"
+    )
     return postings.withColumn(
-        "positions", positions_decode_udf()(F.col("pos_blob"), F.col("pos_offsets"))
+        "positions",
+        F.expr(
+            "if(pos_blob is null, null, transform("
+            f"slice(pos_offsets, 2, size(pos_offsets)), (e, i) -> {per_doc}))"
+        ),
     )
 
 

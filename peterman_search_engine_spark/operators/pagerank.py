@@ -128,12 +128,6 @@ def pagerank(
     return ranks
 
 
-def pagerank_scores(edges: DataFrame, num_iterations: int) -> DataFrame:
-    """Q15 getPageRankScores: all (node, pr) sorted desc
-    (IcsSearchEngine.java:112-121), deterministic tiebreak on node."""
-    return pagerank(edges, num_iterations).orderBy(F.desc("pr"), F.asc("node"))
-
-
 def combined_search(
     scored: DataFrame,
     ranks: DataFrame,

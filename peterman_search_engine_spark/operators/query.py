@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.analysis import analyze_query
+from ..functions.codec import varint_positions_sql
 from ..plans.session import local_frame
 from .indexer import B, K1, InvertedIndex
 
@@ -303,13 +304,14 @@ def search_phrase(index: InvertedIndex, phrase: list[str]) -> DataFrame:
 
     When the index carries compressed positions (pos_blob/pos_offsets —
     always true for persisted indexes, whose on-disk layout stores ONLY
-    the blob), the plan PARTIAL-DECODES: candidate docs are computed
-    from doc_ids alone (the AND semi-join), per-(term,doc) byte slices
-    are cut JVM-side from the blob via the stored offsets (the
-    reference's position-meta-slot lookup, SDM:187-193, 327-341), and
-    only the candidates' slices cross into the Arrow decode UDF —
-    decode volume is |candidates|·|phrase|, not Σ df(term). Otherwise
-    falls back to the pure-JVM array-column join.
+    the blob), the plan PARTIAL-DECODES: candidate docs are the doc_id
+    join of the terms' postings, per-(term,doc) byte slices are cut
+    JVM-side from the blob via the stored offsets (the reference's
+    position-meta-slot lookup, SDM:187-193, 327-341), and only the
+    candidates' slices are varint-decoded, by a JVM expression
+    (``codec.varint_positions_sql``) — decode volume is
+    |candidates|·|phrase|, not Σ df(term), and no Python worker runs.
+    Otherwise the same join carries the raw position arrays.
     """
     if not index.positional:
         raise ValueError("phrase search requires a positional index (IIM:364-366)")
@@ -317,30 +319,59 @@ def search_phrase(index: InvertedIndex, phrase: list[str]) -> DataFrame:
     spark = index.postings.sparkSession
     if not toks:
         return local_frame(spark, [], "doc_id long")
-    per_term = _per_term_positions(index, toks)
-    return _live(index, _phrase_join(per_term, toks))
+    # the pos+j offset test (IIM:424-435)
+    follows = " AND ".join(
+        f"array_contains(p{j}, x + {j})" for j in range(1, len(toks))
+    )
+    return _live(
+        index,
+        _joined_positions(index, toks)
+        .filter(F.expr(f"exists(p0, x -> {follows or 'true'})"))
+        .select("doc_id"),
+    )
 
 
-def _per_term_positions(index: InvertedIndex, toks: list[str]) -> DataFrame:
-    """(term, doc_id, positions) for the query terms, restricted to
-    docs containing ALL of them. Dispatch: raw stored arrays
-    (in-memory build) -> pure-JVM array join; compressed-only or
-    decode-projected positions (persisted index) -> partial decode of
-    candidate byte slices."""
-    p = _postings_for(index, toks)
-    use_partial = "pos_blob" in p.columns and (
+def _joined_positions(index: InvertedIndex, toks: list[str]) -> DataFrame:
+    """(doc_id, p0, ..., p{n-1}) for the docs containing ALL of
+    ``toks``: ``p{j}`` is the position list of ``toks[j]`` (a repeated
+    token repeats its list). Candidates come from an inner join on
+    doc_id of the distinct terms' posting entries, so no aggregation
+    runs. Each entry carries either its raw position array (in-memory
+    build) or, when positions are compressed-only or decode-projected
+    (persisted index), its byte slice of ``pos_blob``, decoded only
+    after the join — for candidates alone."""
+    uniq = sorted(set(toks))
+    p = _postings_for(index, uniq)
+    partial = "pos_blob" in p.columns and (
         "positions" not in p.columns
         or getattr(index, "positions_decoded", False)
     )
-    if use_partial:
-        return _phrase_positions_partial_decode(p, toks)
-    return p.select(
+    entry = (
+        "substring(pos_blob, pos_offsets[i] + 1, pos_offsets[i + 1] - pos_offsets[i])"
+        if partial
+        else "positions[i]"
+    )
+    entries = p.select(
         "term",
-        F.explode(F.arrays_zip("doc_ids", "positions")).alias("_z"),
-    ).select(
-        "term",
-        F.col("_z.doc_ids").alias("doc_id"),
-        F.col("_z.positions").alias("positions"),
+        F.expr(f"inline(transform(doc_ids, (d, i) -> struct(d as doc_id, {entry} as v)))"),
+    )
+    joined = reduce(
+        lambda a, b: a.join(b, "doc_id"),
+        [
+            entries.filter(F.col("term") == t).select("doc_id", F.col("v").alias(f"u{k}"))
+            for k, t in enumerate(uniq)
+        ],
+    )
+    if partial:
+        # inline over a one-struct array decodes each slice once per row:
+        # from a plain projection, filter pushdown would copy the decode
+        # into the callers' lambda bodies and re-run it per element.
+        decoded = ", ".join(
+            f"{varint_positions_sql(f'u{k}')} as u{k}" for k in range(len(uniq))
+        )
+        joined = joined.select("doc_id", F.expr(f"inline(array(struct({decoded})))"))
+    return joined.select(
+        "doc_id", *[F.col(f"u{uniq.index(t)}").alias(f"p{j}") for j, t in enumerate(toks)]
     )
 
 
@@ -352,12 +383,12 @@ def search_proximity(
     window of token positions [a, a+slop] contains at least one
     occurrence of EVERY distinct analyzed query term.
 
-    The plan is the phrase plan — candidate docs computed from doc_ids
-    alone, positions partial-decoded for candidates only — with the
-    pos+j offset test replaced by a windowed exists. Every minimal
-    match window starts at a query-term occurrence, so it suffices to
-    anchor the window at the union of the terms' position lists; the
-    whole test is JVM array lambdas, no Python in the row path.
+    The plan is the phrase plan — candidate docs from the doc_id join,
+    positions partial-decoded for candidates only — with the pos+j
+    offset test replaced by a windowed exists. Every minimal match
+    window starts at a query-term occurrence, so it suffices to anchor
+    the window at the union of the terms' position lists; the whole
+    test is JVM array lambdas, no Python in the row path.
     Returns (doc_id)."""
     if not index.positional:
         raise ValueError("proximity search requires a positional index")
@@ -367,33 +398,16 @@ def search_proximity(
     spark = index.postings.sparkSession
     if not toks:
         return local_frame(spark, [], "doc_id long")
-    per_term = _per_term_positions(index, toks)
-    parts = []
-    for j, t in enumerate(toks):
-        parts.append(
-            per_term.filter(F.col("term") == t).select(
-                "doc_id", F.col("positions").alias(f"p{j}")
-            )
-        )
-    joined = reduce(lambda a, b: a.join(b, "doc_id"), parts)
-    anchors = F.array_distinct(
-        F.concat(*[F.col(f"p{j}") for j in range(len(toks))])
+    lists = [f"p{j}" for j in range(len(toks))]
+    in_window = " AND ".join(
+        f"exists({c}, q -> q >= a AND q <= a + {int(slop)})" for c in lists
     )
-
-    def _window_ok(a: Column) -> Column:
-        # NB: capture `a` by closure, not a lambda default — PySpark
-        # reads the lambda arity to bind (element, index) variables.
-        def _term_ok(j: int) -> Column:
-            return F.exists(
-                F.col(f"p{j}"), lambda q: (q >= a) & (q <= a + F.lit(slop))
-            )
-
-        return reduce(
-            lambda acc, j: acc & _term_ok(j), range(len(toks)), F.lit(True)
-        )
-
+    anchors = f"array_distinct(concat({', '.join(lists)}))"
     return _live(
-        index, joined.filter(F.exists(anchors, _window_ok)).select("doc_id")
+        index,
+        _joined_positions(index, toks)
+        .filter(F.expr(f"exists({anchors}, a -> {in_window})"))
+        .select("doc_id"),
     )
 
 
@@ -407,9 +421,9 @@ def search_span_near(
     (``max_gap=1`` degenerates to the strict phrase). Duplicate terms
     keep their order (each occurrence must advance).
 
-    Plan: exactly the phrase plan — candidates from doc_ids alone,
-    positions partial-decoded for candidates only — then ONE Arrow
-    batch per candidate set running a LINEAR level-wise feasible-set
+    Plan: exactly the phrase plan — candidates from the doc_id join,
+    positions partial-decoded for candidates only — then ONE Arrow UDF
+    (the plan's only Python step) running a LINEAR level-wise feasible-set
     merge (the ordered analogue of the reference phrase scan's
     two-pointer merge, IIM:424-435): S_0 = pos(tok_0); S_j = the
     positions q of tok_j with some s in S_{j-1} in [q-max_gap, q-1]
@@ -426,20 +440,9 @@ def search_span_near(
     if max_gap < 1:
         raise ValueError("max_gap must be >= 1")
     toks = _analyzed(index, terms)
-    spark = index.postings.sparkSession
     if len(toks) < 2:
         # degenerate: single surviving term -> plain containment
         return _docs_for_terms(index, toks)
-    per_term = _per_term_positions(index, sorted(set(toks)))
-    parts = []
-    for j, t in enumerate(toks):
-        parts.append(
-            per_term.filter(F.col("term") == t).select(
-                "doc_id", F.col("positions").alias(f"p{j}")
-            )
-        )
-    joined = reduce(lambda a, b: a.join(b, "doc_id"), parts)
-
     gap = int(max_gap)
 
     @F.pandas_udf("boolean")
@@ -460,7 +463,8 @@ def search_span_near(
 
     arrs = F.array(*[F.col(f"p{j}") for j in range(len(toks))])
     return _live(
-        index, joined.filter(_span_ok(arrs)).select("doc_id")
+        index,
+        _joined_positions(index, toks).filter(_span_ok(arrs)).select("doc_id"),
     )
 
 
@@ -490,72 +494,6 @@ def suggest_spelling(
         .orderBy(F.asc("dist"), F.desc("df"), F.asc("term"))
         .limit(top_k)
     )
-
-
-def _phrase_positions_partial_decode(p: DataFrame, toks: list[str]) -> DataFrame:
-    """(term, doc_id, positions) for CANDIDATE docs only: AND-intersect
-    on doc_ids, slice each candidate's position bytes out of pos_blob
-    with the stored per-doc offsets (JVM substring — no decode), then
-    varint-decode just those slices in one Arrow UDF."""
-    uniq = sorted(set(toks))
-    cand = (
-        p.select("term", F.explode("doc_ids").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.countDistinct("term").alias("_n"))
-        .filter(F.col("_n") == len(uniq))
-        .select("doc_id")
-    )
-    # per-(term, doc) byte slice, cut JVM-side (substring on binary is
-    # 1-based; pos_offsets holds df+1 byte offsets per posting row)
-    pairs = p.select(
-        "term",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, size(doc_ids)-1), i -> struct("
-                "doc_ids[i] as doc_id, "
-                "substring(pos_blob, pos_offsets[i]+1, "
-                "pos_offsets[i+1]-pos_offsets[i]) as pslice))"
-            )
-        ).alias("_z"),
-    ).select("term", F.col("_z.doc_id").alias("doc_id"), F.col("_z.pslice").alias("_s"))
-    hits = pairs.join(cand, "doc_id")  # partial decode: candidates only
-
-    from ..functions.codec import delta_varint_decode
-
-    @F.pandas_udf("array<int>")
-    def _dec(slices: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                delta_varint_decode(bytes(s)).astype(np.int32)
-                if s is not None
-                else None
-                for s in slices
-            ]
-        )
-
-    return hits.select("term", "doc_id", _dec(F.col("_s")).alias("positions"))
-
-
-def _phrase_join(per_term: DataFrame, toks: list[str]) -> DataFrame:
-    """n-way join of per-(term,doc) position lists + the pos+j offset
-    test (IIM:424-435) as JVM array expressions."""
-    parts = []
-    for j, t in enumerate(toks):
-        parts.append(
-            per_term.filter(F.col("term") == t).select(
-                "doc_id", F.col("positions").alias(f"p{j}")
-            )
-        )
-    joined = reduce(lambda a, b: a.join(b, "doc_id"), parts)
-    cond: Column = F.exists(
-        F.col("p0"),
-        lambda p0: reduce(
-            lambda acc, j: acc & F.array_contains(F.col(f"p{j}"), p0 + j),
-            range(1, len(toks)),
-            F.lit(True),
-        ),
-    )
-    return joined.filter(cond).select("doc_id")
 
 
 # -- Q5-Q8: TF-IDF (reference semantics) --------------------------------------

@@ -88,23 +88,6 @@ def _bucket_expr(vec_col: Column, dim: int, num_planes: int) -> Column:
     return bucket
 
 
-def lsh_buckets(
-    embeddings: DataFrame,
-    *,
-    dim: int,
-    num_planes: int = NUM_PLANES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, bucket int): random-hyperplane signature. At scale this
-    is the partition/cluster key — write the table bucketed by it and
-    probes become single-partition scans."""
-    return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        _bucket_expr(F.col(vec_col), dim, num_planes).alias("bucket"),
-    )
-
-
 def embedding_neardup_pairs(
     embeddings: DataFrame,
     *,

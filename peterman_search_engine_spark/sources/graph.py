@@ -25,18 +25,6 @@ def generate_edges(spark: SparkSession, n_nodes: int) -> DataFrame:
     return e1.unionAll(e2).unionAll(e3).filter(F.col("src") != F.col("dst")).distinct()
 
 
-def generate_edges_py(n_nodes: int) -> list[tuple[int, int]]:
-    """Same graph, driver-side, for the pure-Python oracle."""
-    edges = set()
-    for d in range(n_nodes):
-        for dst in ((d * 7 + 1) % n_nodes, (d * 13 + 3) % n_nodes):
-            if dst != d:
-                edges.add((d, dst))
-        if d % 5 == 0 and d != 0:
-            edges.add((d, 0))
-    return sorted(edges)
-
-
 def read_id_graph(spark: SparkSession, path: str) -> DataFrame:
     """Q14 input parity: read the reference's ``id-graph.tsv`` format —
     whitespace-separated ``src dst`` int pairs, one edge per line

@@ -10,7 +10,10 @@ Checks (each printed with the relevant plan excerpt):
 3. top-k as ``TakeOrderedAndProject`` (per-partition bounded heap +
    driver merge — the reference's MinMaxPriorityQueue, distributed);
 4. the aligned posting build contains NO Exchange (zero-shuffle);
-5. WholeStageCodegen covers the JVM doc-length pass.
+5. WholeStageCodegen covers the JVM doc-length pass;
+6. phrase search decodes positions in the JVM: its plan has no
+   ``ArrowEvalPython``/``BatchEvalPython`` node (markers prefixed
+   ``!`` must be absent).
 
 Usage: ``python scripts/explain.py [out.md]`` — writes markdown to
 stdout or the given file. Run from the repo root.
@@ -171,14 +174,26 @@ def main() -> None:
         ["HashAggregate", "LeftSemi", "Filter"],
     ))
 
+    phrase = Q.search_phrase(idx, ["spark", "merge"])
+    sections.append((
+        "Phrase search — candidates are the doc_id join of the two "
+        "terms' posting entries (no aggregation); only the candidates' "
+        "position slices, cut from pos_blob by the stored offsets, are "
+        "varint-decoded, by a JVM expression (Generate), so the plan "
+        "has no Python step; postings keep the term-IN parquet pushdown",
+        formatted(phrase),
+        ["PushedFilters", "BroadcastHashJoin", "Generate",
+         "!ArrowEvalPython", "!BatchEvalPython"],
+    ))
+
     span = Q.search_span_near(idx, ["spark", "merge"], 3)
     sections.append((
-        "Ordered span-near — the phrase partial-decode plan (candidate "
-        "docs from doc_ids alone, per-candidate position slices into "
-        "one Arrow decode) with a nested ordered-window exists as the "
-        "final JVM filter; postings keep the term-IN parquet pushdown",
+        "Ordered span-near — the phrase plan (candidates from the "
+        "doc_id join, their position slices decoded in the JVM) with "
+        "the linear feasible-set merge as its one Arrow UDF "
+        "(_span_ok); postings keep the term-IN parquet pushdown",
         formatted(span),
-        ["PushedFilters", "ArrowEvalPython", "HashAggregate"],
+        ["PushedFilters", "BroadcastHashJoin", "ArrowEvalPython"],
     ))
 
     from peterman_search_engine_spark.operators import similarity as SIM
@@ -225,9 +240,11 @@ def main() -> None:
         out.append(f"\n## {title}\n")
         out.append("Expected markers: " + "; ".join(expects) + "\n")
         for marker in expects:
-            key = marker.split(":")[0].split(" ")[0]
-            hit = key in plan
-            out.append(f"- `{key}` present: **{hit}**\n")
+            # a leading "!" marks an operator the plan must NOT contain
+            absent = marker.startswith("!")
+            key = marker.lstrip("!").split(":")[0].split(" ")[0]
+            hit = (key in plan) != absent
+            out.append(f"- `{key}` {'absent' if absent else 'present'}: **{hit}**\n")
         out.append("\n```\n" + plan.strip() + "\n```\n")
     text = "".join(out)
     if len(sys.argv) > 1:

@@ -16,7 +16,8 @@ closest single-box analogue of cluster executors):
 * 4N = 2 executors x 4 cores, pinned to cpus 0-7
 
 plus one UNPINNED ``local[32]`` run for peak single-box throughput
-(informational; not part of the efficiency ratio).
+(informational; not part of the efficiency ratio). ``--skip-peak``
+leaves it out, and the report then says so in that row.
 
 Why N=2/4N=8 and not 8/32: this box is one socket. Measured on the
 same job, per-core throughput of memory-heavy work drops ~2x as
@@ -495,6 +496,10 @@ def main() -> None:
             "<=2-core legs untouched — best-of measures the job on a\n"
             "quiet machine, median-of measures a typical run through\n"
             "that interference.\n\n"
+            "This file is regenerated by `scripts/scaling.py`. Blocks\n"
+            "between `hand-maintained` HTML comment markers survive a\n"
+            "regeneration, but each is re-inserted just before the\n"
+            "\"## Why N=2\" section, wherever it stood before.\n\n"
             "| leg | best wall (s) | best turns/sec | median wall (s) | median turns/sec |\n"
             "|---|---|---|---|---|\n"
             + "".join(
@@ -506,7 +511,7 @@ def main() -> None:
                 f"| peak, unpinned local[32] (informational) | "
                 f"{peak['build_wall_sec']} | {peak['docs_per_sec']} | — | — |\n"
                 if peak
-                else ""
+                else "| peak, unpinned local[32] — not run (--skip-peak) | — | — | — | — |\n"
             )
             + (
                 "".join(
