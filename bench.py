@@ -1,7 +1,9 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]``. The LAST
+``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` (default: the
+process's CPU-affinity count, as ``plans.session.get_spark`` uses;
+the WAND-regime subprocess gets the same count). The LAST
 stdout line is ONE compact JSON line::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
@@ -44,7 +46,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     tier = os.environ.get("PSE_BENCH_TIER", "bench")
 
     from peterman_search_engine_spark.plans.session import get_spark

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.storage import read_table
+
 NUM_PLANES = 8
 
 
@@ -368,10 +370,10 @@ def ivf_topk_persisted(
     cell partitions (``cell IN (...)`` prunes directories — verify
     with PartitionFilters in .explain). Returns (vec_id, cos double)
     ordered by (-cos, vec_id)."""
-    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
+    cent_rows = read_table(spark, f"{path}/centroids").collect()
     ranked = rank_cells(cent_rows, query_vec)
     probed = [cid for _, cid in ranked[:n_probe]]
-    vecs = spark.read.parquet(f"{path}/vectors").filter(
+    vecs = read_table(spark, f"{path}/vectors").filter(
         F.col("cell").isin(probed)
     )
     if exclude_ids:
@@ -518,7 +520,7 @@ def lsh_multiprobe_persisted(
     probe = enumerate_probe_buckets(
         query_bucket(query_vec, num_planes), num_planes, radius
     )
-    vecs = spark.read.parquet(f"{path}/vectors").filter(
+    vecs = read_table(spark, f"{path}/vectors").filter(
         F.col("bucket").isin(probe)
     )
     if exclude_ids:

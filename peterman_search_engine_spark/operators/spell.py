@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.session import local_frame
+from ..plans.storage import read_table
 from .indexer import InvertedIndex
 from .query import (
     DEFAULT_MAX_EXPANSIONS,
@@ -150,7 +151,7 @@ def load_spell_index(spark: SparkSession, out_dir: str) -> SpellIndex:
     with open(os.path.join(out_dir, "_spell_meta.json")) as f:
         meta = json.load(f)
     return SpellIndex(
-        df=spark.read.parquet(out_dir),
+        df=read_table(spark, out_dir),
         max_dist=meta["max_dist"],
         n_buckets=meta["n_buckets"],
     )

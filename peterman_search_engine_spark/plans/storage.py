@@ -24,6 +24,11 @@ Both modes expose the same four calls, so ``checkpoint.py`` and the
 jobs never branch on the backend. The active mode is reported in
 ``BENCH/BASELINE.md``.
 
+Every package-written parquet table is read through :func:`read_table`,
+which takes the schema from the Spark row schema stored in one data
+file's footer (read on the driver) instead of letting Spark infer it
+with a one-task job — opening an index runs no Spark job.
+
 To enable iceberg mode on a real cluster::
 
     spark-submit --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<ver> \
@@ -37,11 +42,55 @@ the session.
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 CATALOG = "pse"
+
+# the footer key Spark's parquet writer stores its row schema under
+# (and that its own schema inference reads back)
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _first_data_file(path: str) -> str | None:
+    for name in sorted(os.listdir(path)):
+        # Spark's listing filter: `_x`/`.x` entries are not data (except
+        # `_col=v` partition directories), nor are in-flight copies
+        if (
+            (name.startswith("_") and "=" not in name)
+            or name.startswith(".")
+            or name.endswith("._COPYING_")
+        ):
+            continue
+        full = os.path.join(path, name)
+        if not os.path.isdir(full):
+            return full
+        found = _first_data_file(full)
+        if found is not None:
+            return found
+    return None
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """Read a package-written parquet table without a Spark job.
+
+    The data schema comes from the Spark row schema in the footer of
+    the first data file (sorted order, hidden entries skipped as Spark
+    skips them); partition columns (``group=``, ``batch=``, ...) are
+    still discovered from the directory names under ``path``, so the
+    columns and their order equal Spark's own inference."""
+    first = _first_data_file(path)
+    if first is None:
+        raise FileNotFoundError(f"no parquet data file under {path}")
+    meta = pq.read_schema(first).metadata or {}
+    if SPARK_SCHEMA_KEY not in meta:
+        raise ValueError(f"{first} carries no Spark row schema in its footer")
+    schema = StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).option("basePath", path).parquet(path)
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -157,9 +206,7 @@ class TableStore:
     def read(self, name: str) -> DataFrame:
         if self.mode == "iceberg":
             return self.spark.table(self._ident(name))
-        return self.spark.read.option("basePath", self._path(name)).parquet(
-            self._path(name)
-        )
+        return read_table(self.spark, self._path(name))
 
     def exists(self, name: str) -> bool:
         if self.mode == "iceberg":

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.storage import read_table
+
 RARE_TERM = "zq"
 
 
@@ -126,22 +128,22 @@ def build_regime_index(
         spark, n_docs, n_hot=n_hot, partitions=partitions,
         rare_every=rare_every, rare_span=rare_span,
     ).write.mode("overwrite").parquet(f"{work_dir}/corpus")
-    corpus = spark.read.parquet(f"{work_dir}/corpus")
+    corpus = read_table(spark, f"{work_dir}/corpus")
     corpus.select(
         "doc_id", F.size(tokens_expr("text")).alias("doc_len")
     ).write.mode("overwrite").parquet(f"{work_dir}/doc_stats")
-    doc_stats = spark.read.parquet(f"{work_dir}/doc_stats")
+    doc_stats = read_table(spark, f"{work_dir}/doc_stats")
     avg_len = float(doc_stats.agg(F.avg("doc_len")).collect()[0][0] or 0.0)
     postings_from_aligned_corpus(
         corpus, avg_len=avg_len, stem=False, positional=False
     ).write.mode("overwrite").parquet(f"{work_dir}/postings")
-    postings = spark.read.parquet(f"{work_dir}/postings")
+    postings = read_table(spark, f"{work_dir}/postings")
     postings.groupBy("term").agg(
         F.sum("df").alias("df"), F.sum("cf").alias("cf")
     ).write.mode("overwrite").parquet(f"{work_dir}/term_stats")
     index = InvertedIndex(
         postings=postings,
-        term_stats=spark.read.parquet(f"{work_dir}/term_stats"),
+        term_stats=read_table(spark, f"{work_dir}/term_stats"),
         doc_stats=doc_stats,
         n_docs=n_docs,
         avg_len=avg_len,
@@ -158,5 +160,5 @@ def build_regime_index(
     block_meta_df(index).write.mode("overwrite").parquet(
         f"{work_dir}/block_meta"
     )
-    index.block_meta = spark.read.parquet(f"{work_dir}/block_meta")
+    index.block_meta = read_table(spark, f"{work_dir}/block_meta")
     return index

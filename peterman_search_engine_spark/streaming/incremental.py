@@ -71,6 +71,7 @@ from ..operators.indexer import (
     postings_from_tokens,
     tokenize_corpus,
 )
+from ..plans.storage import read_table
 
 
 def _config_path(index_dir: str) -> str:
@@ -139,7 +140,12 @@ def fold_stats(index_dir: str) -> dict:
     records what its batch superseded (upserts), so the fold is exact
     for live docs with O(#batches) driver work — no data scan. A
     compaction snapshot (``_compaction.json``), when present, replaces
-    the manifests it folded; only newer batches are added on top."""
+    the manifests it folded; only newer batches are added on top.
+
+    The same fold names what a reader may see: ``batches`` (every
+    committed batch id) and ``tombstoned`` (committed batches after the
+    snapshot that superseded turns — exactly the live tombstone
+    partitions). Partitions of any other batch are uncommitted."""
     comp = _read_compaction(index_dir)
     if comp is not None:
         n_docs, total_len = comp["n_docs"], comp["total_len"]
@@ -147,17 +153,23 @@ def fold_stats(index_dir: str) -> dict:
     else:
         n_docs = total_len = 0
         max_doc_id, through = -1, -1
+    batches, tombstoned = [], []
     for m in read_manifests(index_dir):
+        batches.append(m["batch"])
         if m["batch"] <= through:
             continue
         n_docs += m["n_docs"] - m.get("n_superseded", 0)
         total_len += m["total_len"] - m.get("superseded_len", 0)
         max_doc_id = max(max_doc_id, m["doc_id_hi"] - 1)
+        if m.get("n_superseded", 0):
+            tombstoned.append(m["batch"])
     return {
         "n_docs": n_docs,
         "total_len": total_len,
         "avg_len": total_len / n_docs if n_docs else 0.0,
         "max_doc_id": max_doc_id,
+        "batches": sorted(batches),
+        "tombstoned": sorted(tombstoned),
     }
 
 
@@ -175,9 +187,14 @@ def ingest_batch(
     """foreachBatch body: one micro-batch of transcript rows → one
     posting group appended to the index. Also usable directly for
     batch-wise incremental loads. Reads nothing data-sized from prior
-    groups — per-batch cost is O(batch) plus, when ``upsert``, a
+    groups — per-batch data work is O(batch) plus, when ``upsert``, a
     bucket-pruned probe of the conv_id→doc_id map (metadata-width
-    rows, |batch-conv buckets|/64 of them)."""
+    rows, |batch-conv buckets|/64 of them). One cost is O(index): to
+    build that probe, Spark lists every batch×bucket directory of the
+    map, and past 32 directories it lists them with parallel Spark
+    jobs. At 5 batches × 64 buckets that is 5 jobs, 320 tasks and
+    ~1.3 s at ``local[4]`` on a 4-vCPU VM, growing with the number of
+    ingested batches."""
     if os.path.exists(_batch_manifest(index_dir, batch_id)):
         return  # replayed batch — already durable
     if batch_df.isEmpty():
@@ -230,11 +247,10 @@ def ingest_batch(
 
     n_sup, sup_len = 0, 0
     map_root = os.path.join(index_dir, "doc_map")
-    has_prior_map = any(
-        e != f"batch={batch_id}" and e.startswith("batch=")
-        for e in os.listdir(map_root)
-    )
-    if upsert and has_prior_map:
+    # only committed batches are probed: an uncommitted batch's map and
+    # tombstones are replayed, never trusted
+    prior_batches = [b for b in prior["batches"] if b < batch_id]
+    if upsert and prior_batches:
         spark = batch_df.sparkSession
         bks = [
             r["b"]
@@ -243,20 +259,21 @@ def ingest_batch(
             ).distinct().collect()
         ]
         prior_map = (
-            spark.read.option("basePath", map_root).parquet(map_root)
-            .filter(F.col("batch") < batch_id)
+            read_table(spark, map_root)
+            .filter(F.col("batch").isin(prior_batches))
             .filter(F.col("bucket").isin(sorted(bks)))
         )
         superseded = prior_map.join(
             assigned.select("conv_id").distinct(), "conv_id", "semi"
         ).select("doc_id", "doc_len")
         tomb_root = os.path.join(index_dir, "tombstones")
-        if os.path.isdir(tomb_root):
+        prior_tombstoned = [b for b in prior["tombstoned"] if b < batch_id]
+        if prior_tombstoned:
             # already-superseded ids must not be counted twice in the
             # manifest fold (conv re-sent a third time)
             prior_tomb = (
-                spark.read.option("basePath", tomb_root).parquet(tomb_root)
-                .filter(F.col("batch") < batch_id)
+                read_table(spark, tomb_root)
+                .filter(F.col("batch").isin(prior_tombstoned))
                 .select("doc_id")
             )
             superseded = superseded.join(prior_tomb, "doc_id", "left_anti")
@@ -294,7 +311,7 @@ def ingest_batch(
     # folded at load/compaction — the global table is never rebuilt
     # per batch, which would be O(total index) work)
     spark = batch_df.sparkSession
-    written = spark.read.parquet(gdir)
+    written = read_table(spark, gdir)
     written.groupBy("term").agg(
         F.sum("df").alias("df"), F.sum("cf").alias("cf")
     ).write.mode("overwrite").parquet(
@@ -372,18 +389,29 @@ def start_incremental_build(
 def load_streaming_index(spark: SparkSession, index_dir: str):
     """Open a streaming-built index with the batch query surface.
     Corpus stats fold from committed manifests; term_stats folds the
-    per-batch deltas unless a compaction materialized the table."""
+    per-batch deltas unless a compaction materialized the table.
+
+    Runs no Spark job: every table is read with its footer schema, and
+    the manifest fold decides which partitions are visible (committed
+    batches only — a batch whose manifest was never written stays
+    invisible to queries as well as to the stats) and whether any
+    tombstone is live."""
     from ..operators.indexer import InvertedIndex
 
     with open(_config_path(index_dir)) as f:
         cfg = json.load(f)
     stats = fold_stats(index_dir)
+    committed = stats["batches"]
 
-    postings = spark.read.option(
-        "basePath", os.path.join(index_dir, "postings")
-    ).parquet(os.path.join(index_dir, "postings"))
-    if "group" in postings.columns:
-        postings = postings.drop("group")
+    postings = (
+        read_table(spark, os.path.join(index_dir, "postings"))
+        .filter(
+            F.col("group").isin(
+                ["compacted"] + [f"stream_{b}" for b in committed]
+            )
+        )
+        .drop("group")
+    )
     positions_decoded = False
     if cfg["positional"] and "positions" not in postings.columns:
         from ..operators.indexer import with_positions
@@ -397,12 +425,16 @@ def load_streaming_index(spark: SparkSession, index_dir: str):
     # arrived after a compaction, and the sum of the two is exact
     ts_dir = os.path.join(index_dir, "term_stats")
     td_dir = os.path.join(index_dir, "term_stats_delta")
+    deltas = [
+        b for b in committed if os.path.isdir(os.path.join(td_dir, f"batch={b}"))
+    ]
     parts = []
     if os.path.isdir(ts_dir):
-        parts.append(spark.read.parquet(ts_dir).select("term", "df", "cf"))
-    if os.path.isdir(td_dir) and os.listdir(td_dir):
+        parts.append(read_table(spark, ts_dir).select("term", "df", "cf"))
+    if deltas:
         parts.append(
-            spark.read.option("basePath", td_dir).parquet(td_dir)
+            read_table(spark, td_dir)
+            .filter(F.col("batch").isin(deltas))
             .select("term", "df", "cf")
         )
     term_stats = parts[0]
@@ -413,30 +445,29 @@ def load_streaming_index(spark: SparkSession, index_dir: str):
             F.sum("df").alias("df"), F.sum("cf").alias("cf")
         )
 
-    ds = spark.read.option(
-        "basePath", os.path.join(index_dir, "doc_stats")
-    ).parquet(os.path.join(index_dir, "doc_stats"))
-    if "batch" in ds.columns:
-        ds = ds.drop("batch")
+    # batch=-1 is compaction's live-only rewrite
+    ds = (
+        read_table(spark, os.path.join(index_dir, "doc_stats"))
+        .filter(F.col("batch").isin([-1] + committed))
+        .drop("batch")
+    )
 
     # superseded turns (upserts): queries exclude them via _live; n_docs
     # / avg_len above are already live-exact (manifest fold). df/cf
     # still count them until reencode_blocks — same drift contract as
     # maintenance.delete_documents, and WAND routes exhaustive while
     # tombstones exist. Tombstone partitions already folded into a
-    # compaction snapshot are dead (their docs are physically gone).
+    # compaction snapshot are dead (their docs are physically gone), so
+    # tombstones are live exactly when a committed batch after the
+    # snapshot superseded turns. Ingest writes each superseded id once
+    # and the left-anti join ignores duplicates, so no dedup is needed.
     tombstones = None
-    comp = _read_compaction(index_dir)
-    through = comp["through_batch"] if comp else -1
-    tomb_root = os.path.join(index_dir, "tombstones")
-    if os.path.isdir(tomb_root) and os.listdir(tomb_root):
-        t = (
-            spark.read.option("basePath", tomb_root).parquet(tomb_root)
-            .filter(F.col("batch") > through)
-            .select("doc_id").distinct()
+    if stats["tombstoned"]:
+        tombstones = (
+            read_table(spark, os.path.join(index_dir, "tombstones"))
+            .filter(F.col("batch").isin(stats["tombstoned"]))
+            .select("doc_id")
         )
-        if t.take(1):
-            tombstones = t
 
     bm_dir = os.path.join(index_dir, "block_meta")
     return InvertedIndex(
@@ -448,7 +479,7 @@ def load_streaming_index(spark: SparkSession, index_dir: str):
         positional=cfg["positional"],
         stem=cfg["stem"],
         block_size=cfg.get("block_size", DEFAULT_BLOCK_SIZE),
-        block_meta=spark.read.parquet(bm_dir) if os.path.isdir(bm_dir) else None,
+        block_meta=read_table(spark, bm_dir) if os.path.isdir(bm_dir) else None,
         positions_decoded=positions_decoded,
         tombstones=tombstones,
     )
@@ -529,14 +560,14 @@ def reencode_blocks(
             if os.path.isdir(map_root + ".new"):
                 shutil.rmtree(map_root + ".new")
             (
-                spark.read.option("basePath", map_root).parquet(map_root)
+                read_table(spark, map_root)
                 .join(idx.tombstones, "doc_id", "left_anti")
                 .write.partitionBy("batch", "bucket")
                 .parquet(map_root + ".new")
             )
         # snapshot stats come from the .new files — independent of the
         # about-to-be-removed old layout
-        row = spark.read.parquet(ds_root + ".new").agg(
+        row = read_table(spark, ds_root + ".new").agg(
             F.count("*").alias("n"), F.sum("doc_len").alias("len")
         ).collect()[0]
         snap = {

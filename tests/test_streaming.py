@@ -9,6 +9,7 @@ from peterman_search_engine_spark.operators.indexer import build_index
 from peterman_search_engine_spark.operators.query import (
     search_and,
     search_bm25,
+    search_or,
     search_phrase,
 )
 from peterman_search_engine_spark.operators.wand import bm25_topk_wand
@@ -215,6 +216,39 @@ def test_streaming_crash_before_manifest_replays_exactly(spark, split_input, tmp
     b = [(r["doc_id"], round(r["score"], 9))
          for r in search_bm25(bidx, ["spark", "merge"], 10).collect()]
     assert a == b
+
+
+def test_streaming_crash_before_manifest_hides_uncommitted_data(spark, tmp_path):
+    """Queries see only committed batches, like the stats do. Batch 1
+    re-sends ``ca`` (tombstoning doc 0) and adds ``cc``; with its
+    manifest gone, neither its tombstone nor its postings may show,
+    and its replay makes both visible."""
+    index_dir = str(tmp_path / "sidx_uncommitted")
+    batches = [
+        [("ca", 0, "alpha engine"), ("cb", 0, "beta engine")],
+        [("ca", 0, "alpha engine again"), ("cc", 0, "gamma engine")],
+    ]
+
+    def ingest(i):
+        ingest_batch(
+            spark.createDataFrame(
+                batches[i], "conv_id string, turn_idx int, text string"
+            ),
+            index_dir, i, stem=False, positional=True, docs_per_segment=2,
+        )
+
+    ingest(0)
+    ingest(1)
+    os.remove(os.path.join(index_dir, "_manifest", "batch_1.json"))
+    idx = load_streaming_index(spark, index_dir)
+    assert idx.n_docs == 2
+    assert idx.tombstones is None
+    assert sorted(r["doc_id"] for r in search_or(idx, ["engine"]).collect()) == [0, 1]
+    assert idx.doc_stats.count() == 2
+    ingest(1)
+    idx = load_streaming_index(spark, index_dir)
+    assert idx.n_docs == 3
+    assert sorted(r["doc_id"] for r in search_or(idx, ["engine"]).collect()) == [1, 2, 3]
 
 
 def test_streaming_ingest_never_rescans_prior_groups(spark, split_input, tmp_path):
