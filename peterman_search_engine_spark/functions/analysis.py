@@ -35,6 +35,7 @@ positions.
 
 from __future__ import annotations
 
+import re
 from typing import Iterator
 
 import pandas as pd
@@ -45,8 +46,14 @@ from pyspark.sql.types import ArrayType, StringType
 from .stemmer import porter_stem
 from .stopwords import STOP_WORDS
 
-# Reference split set: whitespace + , . ; ? !  (PunctuationTokenizer.java:26-30)
-TOKEN_SPLIT_RE = r"[\s,.;?!]+"
+# Reference split set: whitespace + , . ; ? !  (PunctuationTokenizer.java:26-30).
+# "Whitespace" is Java's ``\s`` — exactly `` \t\n\x0b\f\r`` — spelled
+# out, because ``\s`` means three different sets in the three regex
+# engines that read this class: Java (``tokens_expr``), Python ``re``
+# (``_analyze_py``, Unicode-aware) and RE2 (the DuckDB oracle, no
+# ``\x0b``). Every engine reads the explicit class the same way, and
+# the byte tokenizer's delimiter table is derived from it.
+TOKEN_SPLIT_RE = r"[ \t\n\x0b\x0c\r,.;?!]+"
 
 def tokens_expr(text: Column | str, *, keep_stopwords: bool = False) -> Column:
     """A1/A2 as a pure Column expression: lowercase, split on the
@@ -66,8 +73,6 @@ def tokens_expr(text: Column | str, *, keep_stopwords: bool = False) -> Column:
 def _analyze_py(text: str, stem: bool) -> list[str]:
     """Single-string analyzer shared by the Arrow UDF and the pure
     Python oracle — one definition so engine and oracle cannot drift."""
-    import re
-
     out = []
     for tok in re.split(TOKEN_SPLIT_RE, text.lower()):
         if not tok or tok in STOP_WORDS:
@@ -121,7 +126,8 @@ from .wordbreak import word_break, word_break_udf  # noqa: E402,F401
 # Non-ASCII batches fall back to the per-string analyzer for exact
 # unicode parity (`_analyze_py`).
 
-_DELIM_BYTES = b" \t\n\r\x0b\x0c,.;?!"
+# the bytes of TOKEN_SPLIT_RE's class (every one ASCII)
+_DELIM_BYTES = bytes(c for c in range(128) if re.fullmatch(TOKEN_SPLIT_RE, chr(c)))
 _DELIM_LUT = None
 _STOP_VOID_BY_W: dict[int, "np.ndarray"] = {}
 _LONG_CAP = 32

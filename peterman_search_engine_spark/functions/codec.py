@@ -14,7 +14,8 @@ Byte-format parity with the reference:
   4-byte big-endian ints, no compression.
 
 All encode/decode is numpy-vectorized (no per-int Python loops); these
-run inside Arrow pandas UDFs / applyInPandas during segment build.
+run inside the Arrow posting-build kernel during segment build and
+inside the re-encode pandas UDF of merges and compactions.
 Reads of stored position lists decode inside the JVM instead
 (``varint_positions_sql``, a Spark SQL expression), so no query or
 maintenance plan ships position bytes to a Python worker.

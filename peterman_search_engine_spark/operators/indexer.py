@@ -5,56 +5,56 @@ in-memory table, flush to an immutable on-disk segment, pairwise-merge
 segments (``InvertedIndexManager.java:169-291``). Spark-first
 re-expression:
 
-* ``addDocument``/buffer (B1) -> one declarative dataflow:
-  ``corpus -> analyze -> posexplode -> two-level aggregation``.
+* ``addDocument``/buffer (B1) + flush (B2) -> ONE posting-build
+  kernel, ``_build_group_arrow``: a segment's (doc_id, text) columns
+  go in as Arrow buffers, and its posting rows come out as one Arrow
+  RecordBatch (vectorized byte tokenizer, lexsort, run-length
+  boundaries, grouped varint encode, per-block BM25 upper bounds) —
+  the reference flushes every segment through one routine the same
+  way (``IIM:209-263``, ``SDM:110-199``).
 * segment (flush unit, B2) -> ``segment_id = doc_id // docs_per_segment``
   doc_id-range bucket. Posting lists are stored PER (segment, term), so
   no task ever materializes a full global posting list — a stop-word
   term at 10^12 turns splits across segments instead of one reducer.
-  This is also the natural skew defuser: the shuffle key for posting
-  construction is (segment, term, doc_id) and then (segment, term),
-  both well-distributed even for terms occurring in 30%+ of turns.
+  The segment id is also the skew defuser: the only shuffle key of the
+  build is the segment, so a group holds at most docs_per_segment docs
+  however hot its terms are.
 * merge (B3/B4) -> ``merge_segments``: re-keying + TWO-PHASE SALTED
   aggregation by term (the old segment id is the salt), replacing the
   reference's manual two-pointer dictionary merge and docID rebasing
   (``IIM:905-953, 1035-1060``) — global dense doc_ids make rebasing
-  unnecessary.
-* compression (B5/B6) -> delta+varint blobs computed in ONE
-  Arrow-vectorized pandas UDF per posting row (numpy, no per-int
-  Python), plus per-block BM25 upper bounds for block-max WAND.
+  unnecessary. Merged lists are re-encoded (delta+varint blobs, block
+  upper bounds) by one Arrow-vectorized pandas UDF per posting row.
 * DocStore (B10) -> the corpus table itself; point lookup = join on
   doc_id.
 
-Build strategies, fastest first:
+The kernel has two entry points, with one output contract:
 
-* ``postings_from_aligned_corpus`` — ZERO-SHUFFLE: requires the
-  corpus partitioned into disjoint doc_id ranges (the docmap
-  invariant); segment = input partition; ``mapInArrow`` builds each
-  segment's rows from flat numpy buffers (vectorized byte tokenizer,
-  grouped varint encode, Arrow arrays assembled from offsets+values
-  buffers — no per-posting Python object anywhere).
-* ``postings_from_corpus`` — ONE text shuffle ``groupBy(segment)``
-  + applyInPandas, for corpora without the range-partition invariant.
-* ``postings_from_tokens`` / ``postings_from_tokens_agg`` — exploded
-  token-row forms (one/two shuffles), kept for plan comparison and
-  for pre-tokenized inputs.
+* ``postings_from_aligned_corpus`` — ZERO-SHUFFLE ``mapInArrow``:
+  requires the corpus partitioned into disjoint doc_id ranges (the
+  docmap invariant); segment = input partition.
+* ``postings_from_corpus`` — ONE text shuffle by segment, then
+  ``groupBy(segment).applyInArrow`` into the kernel, for corpora
+  without the range-partition invariant. The checkpointed, in-memory,
+  streaming and upsert builds all run it.
 
-The analyzer is either pure-JVM column expressions (stem=False
-doc-stats pass) or the vectorized byte-level ``tokenize_block``
-inside the build UDF (stem=True supported via per-unique-term
-stemming).
+Doc lengths for ``doc_stats`` come from the pure-JVM ``tokens_expr``
+(stemming never changes token counts); the kernel's own analyzer is the
+byte-level ``tokenize_block`` with the per-string ``_analyze_py`` as its
+non-ASCII fallback. All three split on the same delimiter class
+(``analysis.TOKEN_SPLIT_RE``).
 """
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType,
     StructField, StructType,
@@ -210,10 +210,11 @@ class InvertedIndex:
     # scan |postings|/block_size metadata rows without touching the
     # wide posting columns; derived lazily from postings when absent.
     block_meta: DataFrame | None = None
-    # True when `positions` is a decode-UDF projection over
-    # pos_blob/pos_offsets (loaded indexes) rather than a stored array
-    # column — the phrase path then partial-decodes byte slices instead
-    # of running the whole-column decode through the legacy array join.
+    # True when `positions` is a projection over pos_blob/pos_offsets
+    # (loaded indexes: the JVM varint-decode expression of
+    # `with_positions`) rather than a stored array column — the phrase
+    # path then cuts and decodes only its candidates' byte slices
+    # instead of decoding every entry's positions.
     positions_decoded: bool = False
     # tombstoned doc_ids (one column, `doc_id long`), or None. Queries
     # exclude these docs from results while corpus-wide stats (df, N,
@@ -244,9 +245,6 @@ def tokenize_corpus(corpus: DataFrame, *, stem: bool = True) -> DataFrame:
     else:
         tok = tokens_expr("text")
     return corpus.select("doc_id", tok.alias("tokens"))
-
-
-DEFAULT_TERM_BUCKETS = 32
 
 
 def _posting_schema(positional: bool, raw_positions: bool = True) -> StructType:
@@ -283,122 +281,6 @@ def _posting_schema(positional: bool, raw_positions: bool = True) -> StructType:
     return StructType(fields)
 
 
-
-def _empty_pdf(schema: StructType) -> pd.DataFrame:
-    """Schema-shaped 0-row pandas frame with OBJECT dtype columns.
-    ``pd.DataFrame({name: []})`` defaults every column to float64,
-    which Arrow cannot convert to list/binary types ("NumPyConverter
-    doesn't implement list<...>") — surfaced by groups whose documents
-    tokenize to zero terms (empty or all-stop-word text)."""
-    return pd.DataFrame({f.name: pd.Series(dtype=object) for f in schema.fields})
-
-
-def postings_from_tokens(
-    toks: DataFrame,
-    *,
-    avg_len: float,
-    positional: bool = True,
-    docs_per_segment: int = DEFAULT_DOCS_PER_SEGMENT,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-    term_buckets: int = DEFAULT_TERM_BUCKETS,
-    raw_positions: bool = True,
-) -> DataFrame:
-    """Posting construction: ONE shuffle on (segment, term-bucket)
-    followed by an Arrow ``applyInPandas`` that builds every posting
-    list of the group in numpy. toks = (doc_id, tokens array<string>).
-
-    Why not groupBy+collect_list? Profiled on 600k turns: the
-    collect_list-of-structs aggregation is allocation-bound inside the
-    shared JVM heap and gets SLOWER from local[8] to local[32] (GC
-    contention); the applyInPandas form moves the assembly into
-    independent Python worker processes (no shared heap, no GIL
-    sharing) and scales with cores. The shuffle key (segment,
-    pmod(hash(term), term_buckets)) gives segments × buckets uniform
-    groups — the segment id caps posting length (doc_id-range split)
-    and the term bucket caps group width, so a stop-word-grade term at
-    10^12 turns still never lands on one reducer.
-
-    Returns (segment, term, df, cf, doc_ids, tfs, [positions], blob,
-    block_starts, block_ubs); doc_ids/positions are sorted (reference
-    invariant, ``InvertedIndexManager.java:228-244``).
-    """
-    exploded = toks.select(
-        "doc_id",
-        F.size("tokens").alias("doc_len"),
-        F.posexplode("tokens").alias("pos", "term"),
-    ).withColumn(
-        "segment", (F.col("doc_id") / F.lit(docs_per_segment)).cast("long")
-    ).withColumn(
-        "tb", F.pmod(F.hash("term"), F.lit(term_buckets))
-    )
-
-    schema = _posting_schema(positional, raw_positions)
-
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return _empty_pdf(schema)
-        seg = int(pdf["segment"].iloc[0])
-        terms = pdf["term"].to_numpy()
-        docs = pdf["doc_id"].to_numpy(dtype=np.int64)
-        poss = pdf["pos"].to_numpy(dtype=np.int32)
-        dlens = pdf["doc_len"].to_numpy(dtype=np.float64)
-        tcodes, tinv = np.unique(terms, return_inverse=True)
-        order = np.lexsort((poss, docs, tinv))
-        tinv, docs, poss, dlens = tinv[order], docs[order], poss[order], dlens[order]
-        # (term, doc) run boundaries
-        pair_change = np.empty(len(docs), dtype=bool)
-        pair_change[0] = True
-        pair_change[1:] = (tinv[1:] != tinv[:-1]) | (docs[1:] != docs[:-1])
-        pstart = np.flatnonzero(pair_change)
-        pend = np.append(pstart[1:], len(docs))
-        p_t = tinv[pstart]           # term code per (term,doc) pair
-        p_doc = docs[pstart]
-        p_tf = (pend - pstart).astype(np.int32)
-        p_dlen = dlens[pstart]
-        # term run boundaries over the pair arrays
-        t_change = np.empty(len(p_t), dtype=bool)
-        t_change[0] = True
-        t_change[1:] = p_t[1:] != p_t[:-1]
-        tstart = np.flatnonzero(t_change)
-        tend = np.append(tstart[1:], len(p_t))
-
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for s, e in zip(tstart, tend):
-            ids = p_doc[s:e]
-            tfs = p_tf[s:e]
-            part = _bm25_tf_part(tfs.astype(np.float64), p_dlen[s:e], avg_len)
-            starts, ubs = [], []
-            for bs, be in block_offsets(len(ids), block_size):
-                starts.append(int(ids[bs]))
-                ubs.append(float(part[bs:be].max()))
-            out["segment"].append(seg)
-            out["term"].append(tcodes[p_t[s]])
-            out["df"].append(int(e - s))
-            out["cf"].append(int(tfs.sum()))
-            out["doc_ids"].append(ids)
-            out["tfs"].append(tfs)
-            if positional:
-                # positions of the term's rows, split at pair bounds
-                row_s, row_e = pstart[s], pend[e - 1]
-                bounds = pstart[s + 1:e] - row_s
-                if raw_positions:
-                    out["positions"].append(
-                        np.split(poss[row_s:row_e], bounds)
-                    )
-                pbuf, poffs = delta_varint_encode_grouped(
-                    poss[row_s:row_e].astype(np.int64),
-                    np.concatenate(([0], bounds)),
-                )
-                out["pos_blob"].append(pbuf.tobytes())
-                out["pos_offsets"].append(poffs.astype(np.int32))
-            out["blob"].append(delta_varint_encode(ids))
-            out["block_starts"].append(starts)
-            out["block_ubs"].append(ubs)
-        return pd.DataFrame(out)
-
-    return exploded.groupBy("segment", "tb").applyInPandas(_build, schema)
-
-
 def postings_from_corpus(
     corpus: DataFrame,
     *,
@@ -409,23 +291,20 @@ def postings_from_corpus(
     block_size: int = DEFAULT_BLOCK_SIZE,
     raw_positions: bool = True,
 ) -> DataFrame:
-    """Fully-fused posting construction: shuffle RAW (doc_id, text)
-    rows by segment, then ONE applyInPandas per segment does
-    tokenize + stop-filter + stem + posting assembly + varint encode
-    in a single Python pass. ``raw_positions=False`` skips building
-    the nested position arrays entirely (compressed blob only — the
-    persisted contract).
+    """The shuffled entry to the posting-build kernel: shuffle RAW
+    (doc_id, text) rows by segment, then ``groupBy(segment)
+    .applyInArrow`` hands each segment's Arrow columns to
+    ``_build_group_arrow`` (tokenize + stop-filter + stem + posting
+    assembly + varint encode in one vectorized pass). The shuffle
+    moves |docs| compact text rows, never |tokens| exploded rows, and
+    no token ever exists as a Spark row. Group memory is bounded by
+    docs_per_segment × avg doc bytes — docs_per_segment is the knob
+    (semantic segment granularity AND the task-size cap).
+    ``raw_positions=False`` skips building the nested position arrays
+    entirely (compressed blob only — the persisted contract).
 
-    vs ``postings_from_tokens``: the shuffle moves |docs| compact text
-    rows instead of |tokens| exploded rows (~15× fewer at transcript
-    lengths), and the tokens never round-trip through Arrow at all.
-    Group memory is bounded by docs_per_segment × avg doc bytes —
-    docs_per_segment is the knob (semantic segment granularity AND
-    the task-size cap). Output contract identical to
-    ``postings_from_tokens``.
+    Output contract identical to ``postings_from_aligned_corpus``.
     """
-    from ..functions.analysis import _analyze_py
-
     part = corpus.withColumn(
         "segment", (F.col("doc_id") / F.lit(docs_per_segment)).cast("long")
     )
@@ -436,7 +315,7 @@ def postings_from_corpus(
     # parallelism below the core count — must not apply. A
     # user-specified numPartitions is exempt from AQE coalescing, and
     # hash-partitioning on "segment" satisfies the groupBy's required
-    # distribution, so applyInPandas adds no second exchange.
+    # distribution, so applyInArrow adds no second exchange.
     sc = corpus.sparkSession.sparkContext
     nparts = max(
         int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions")),
@@ -444,19 +323,25 @@ def postings_from_corpus(
     )
     part = part.repartition(nparts, "segment")
     schema = _posting_schema(positional, raw_positions)
+    empty = to_arrow_schema(schema).empty_table()
 
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _build_group(
-            pdf,
+    # No type hints: applyInArrow infers its eval type from hints, and
+    # under `from __future__ import annotations` they are strings it
+    # cannot resolve. Unhinted, it takes the (key, pa.Table) form.
+    def _build(key, table):
+        out = _build_group_arrow(
+            key[0].as_py(),
+            table.column("doc_id").combine_chunks().to_numpy(),
+            table.column("text").combine_chunks(),
             stem=stem,
             positional=positional,
             avg_len=avg_len,
             block_size=block_size,
-            schema=schema,
             raw_positions=raw_positions,
         )
+        return empty if out is None else pa.Table.from_batches([out])
 
-    return part.groupBy("segment").applyInPandas(_build, schema)
+    return part.groupBy("segment").applyInArrow(_build, schema)
 
 
 def postings_from_aligned_corpus(
@@ -475,7 +360,7 @@ def postings_from_aligned_corpus(
     ``repartitionByRange(conv_id, turn_idx)``. Segment = the input
     partition itself (a doc_id range), so every posting list is
     complete within one task and the build plan contains NO exchange:
-    scan -> mapInPandas -> write. At 100 TB this is the difference
+    scan -> mapInArrow -> write. At 100 TB this is the difference
     between re-shuffling the whole corpus text and streaming each
     input split through a Python worker once; profiled on a 6M-turn
     corpus the text exchange was the single non-scaling component of
@@ -543,7 +428,6 @@ def _build_group_arrow(
     feed the vectorized byte tokenizer zero-copy). Returns None for an
     empty group."""
     from ..functions.analysis import _analyze_py, tokenize_block
-    from ..functions.codec import delta_varint_encode_grouped
 
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     tok = None
@@ -690,181 +574,6 @@ def _build_group_arrow(
     return pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols.keys()))
 
 
-def _build_group(
-    pdf: pd.DataFrame,
-    *,
-    stem: bool,
-    positional: bool,
-    avg_len: float,
-    block_size: int,
-    schema: StructType,
-    raw_positions: bool = True,
-) -> pd.DataFrame:
-    """Build every posting row of one segment group in numpy:
-    tokenize + stop-filter + stem + lexsort + run-length boundaries +
-    varint encode + per-block BM25 upper bounds. ``pdf`` must carry
-    (segment, doc_id, text) with a single segment value. Analysis runs
-    through the vectorized byte tokenizer (same as the mapInArrow
-    path); non-ASCII batches fall back to the per-string analyzer."""
-    from ..functions.analysis import _analyze_py, tokenize_block
-
-    if len(pdf) == 0:
-        return _empty_pdf(schema)
-    seg = int(pdf["segment"].iloc[0])
-    doc_ids_np = pd.to_numeric(pdf["doc_id"]).to_numpy(np.int64)
-    tok = None
-    try:
-        arr = pa.array(
-            pdf["text"].map(lambda t: t if t is not None else ""), pa.string()
-        )
-        bufs = arr.buffers()
-        offs = np.frombuffer(bufs[1], dtype=np.int32)[: len(arr) + 1]
-        dat = (
-            np.frombuffer(bufs[2], dtype=np.uint8)
-            if bufs[2] is not None
-            else np.empty(0, np.uint8)
-        )
-        tok = tokenize_block(dat, offs, stem=stem)
-    except (ValueError, pa.lib.ArrowException):
-        # non-ascii (ValueError) or an Arrow construction limit —
-        # either way the per-string analyzer below is the exact path
-        tok = None
-    if tok is not None:
-        tcodes, tinv, tdoc, poss, dl = tok
-        total = len(tinv)
-        if total == 0:
-            return _empty_pdf(schema)
-        docs = doc_ids_np[tdoc]
-        dlens = dl.astype(np.float64)[tdoc]
-    else:
-        toks_list = [_analyze_py(t or "", stem) for t in pdf["text"]]
-        counts = np.fromiter(
-            (len(t) for t in toks_list), np.int64, len(toks_list)
-        )
-        total = int(counts.sum())
-        if total == 0:
-            return _empty_pdf(schema)
-        docs = np.repeat(doc_ids_np, counts)
-        dlens = np.repeat(counts.astype(np.float64), counts)
-        # per-doc position = global index minus the doc's start offset
-        starts_rep = np.repeat(np.cumsum(counts) - counts, counts)
-        poss = (np.arange(total) - starts_rep).astype(np.int32)
-        terms = np.array(
-            [tok_ for toks in toks_list for tok_ in toks], dtype=object
-        )
-        tcodes, tinv = np.unique(terms, return_inverse=True)
-    order = np.lexsort((poss, docs, tinv))
-    tinv, docs, poss, dlens = tinv[order], docs[order], poss[order], dlens[order]
-    pair_change = np.empty(total, dtype=bool)
-    pair_change[0] = True
-    pair_change[1:] = (tinv[1:] != tinv[:-1]) | (docs[1:] != docs[:-1])
-    pstart = np.flatnonzero(pair_change)
-    pend = np.append(pstart[1:], total)
-    p_t = tinv[pstart]
-    p_doc = docs[pstart]
-    p_tf = (pend - pstart).astype(np.int32)
-    p_dlen = dlens[pstart]
-    t_change = np.empty(len(p_t), dtype=bool)
-    t_change[0] = True
-    t_change[1:] = p_t[1:] != p_t[:-1]
-    tstart = np.flatnonzero(t_change)
-    tend = np.append(tstart[1:], len(p_t))
-
-    out: dict[str, list] = {f.name: [] for f in schema.fields}
-    for s, e in zip(tstart, tend):
-        ids = p_doc[s:e]
-        tfs = p_tf[s:e]
-        bm = _bm25_tf_part(tfs.astype(np.float64), p_dlen[s:e], avg_len)
-        bstarts, ubs = [], []
-        for bs, be in block_offsets(len(ids), block_size):
-            bstarts.append(int(ids[bs]))
-            ubs.append(float(bm[bs:be].max()))
-        out["segment"].append(seg)
-        out["term"].append(tcodes[p_t[s]])
-        out["df"].append(int(e - s))
-        out["cf"].append(int(tfs.sum()))
-        out["doc_ids"].append(ids)
-        out["tfs"].append(tfs)
-        if positional:
-            row_s, row_e = pstart[s], pend[e - 1]
-            bounds = pstart[s + 1:e] - row_s
-            if raw_positions:
-                out["positions"].append(np.split(poss[row_s:row_e], bounds))
-            pbuf, poffs = delta_varint_encode_grouped(
-                poss[row_s:row_e].astype(np.int64),
-                np.concatenate(([0], bounds)),
-            )
-            out["pos_blob"].append(pbuf.tobytes())
-            out["pos_offsets"].append(poffs.astype(np.int32))
-        out["blob"].append(delta_varint_encode(ids))
-        out["block_starts"].append(bstarts)
-        out["block_ubs"].append(ubs)
-    return pd.DataFrame(out)
-
-
-
-
-def postings_from_tokens_agg(
-    toks: DataFrame,
-    *,
-    avg_len: float,
-    positional: bool = True,
-    docs_per_segment: int = DEFAULT_DOCS_PER_SEGMENT,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-) -> DataFrame:
-    """The declarative two-shuffle (groupBy + collect_list) form of
-    posting construction — kept for plan comparison and as a fallback
-    where applyInPandas is undesirable. Identical output contract."""
-    # (doc_id, doc_len, pos, term); positions are post-stop-filter
-    # indexes (IIM:173-184) because the analyzer already filtered.
-    exploded = toks.select(
-        "doc_id",
-        F.size("tokens").alias("doc_len"),
-        F.posexplode("tokens").alias("pos", "term"),
-    )
-    seg = (F.col("doc_id") / F.lit(docs_per_segment)).cast("long").alias("segment")
-
-    # shuffle 1: per (segment, term, doc) tf + sorted positions.
-    td = exploded.groupBy(seg, "term", "doc_id").agg(
-        F.count("*").cast("int").alias("tf"),
-        F.first("doc_len").alias("doc_len"),
-        F.sort_array(F.collect_list("pos")).alias("positions"),
-    )
-
-    # shuffle 2: per (segment, term) sorted posting list. sort_array on
-    # struct sorts by the first field (doc_id) — reference invariant
-    # "postings sorted by docID" (IIM:228-234).
-    plist = F.sort_array(
-        F.collect_list(F.struct("doc_id", "tf", "positions", "doc_len"))
-    ).alias("plist")
-    seg_postings = td.groupBy("segment", "term").agg(
-        F.count("*").alias("df"),
-        F.sum("tf").cast("long").alias("cf"),
-        plist,
-    )
-    cols = [
-        "segment",
-        "term",
-        "df",
-        "cf",
-        F.col("plist.doc_id").alias("doc_ids"),
-        F.col("plist.tf").alias("tfs"),
-    ]
-    if positional:
-        cols.append(F.col("plist.positions").alias("positions"))
-    cols.append(F.col("plist.doc_len").alias("_doc_lens"))
-    seg_postings = seg_postings.select(*cols)
-
-    enc_cols = [F.col("doc_ids"), F.col("tfs"), F.col("_doc_lens")]
-    if positional:
-        enc_cols.append(F.col("positions"))
-    enc = _make_encode_udf(avg_len, block_size, positional=positional)(*enc_cols)
-    out = seg_postings.withColumn("_enc", enc)
-    for f in (_ENC_SCHEMA_POS if positional else _ENC_SCHEMA).fields:
-        out = out.withColumn(f.name, F.col(f"_enc.{f.name}"))
-    return out.select([f.name for f in _posting_schema(positional).fields])
-
-
 def build_index(
     corpus: DataFrame,
     *,
@@ -878,8 +587,8 @@ def build_index(
     Pass 1 (stats): doc_len per doc via the PURE-JVM tokenizer
     expression — stemming never changes token counts, so the count of
     the A1-filtered list equals the analyzed length; zero Python,
-    JVM-side. Pass 2 (postings): the fused per-segment
-    applyInPandas (``postings_from_corpus``).
+    JVM-side. Pass 2 (postings): the per-segment posting-build kernel
+    behind one text shuffle (``postings_from_corpus``).
     """
     doc_stats = corpus.select(
         "doc_id", F.size(tokens_expr("text")).alias("doc_len")

@@ -13,6 +13,7 @@ engine-independent).
 
 from __future__ import annotations
 
+from ..functions.analysis import TOKEN_SPLIT_RE
 from ..functions.stopwords import STOP_WORDS
 from ..functions.textstats import BPE_RE, FP_MOD, PUNCT_RE
 from ..operators.similarity import NUM_PLANES
@@ -20,7 +21,9 @@ from ..operators.similarity import NUM_PLANES
 STOP_SQL = ", ".join(f"'{w}'" for w in sorted(STOP_WORDS))
 
 # A1 tokenizer over the documents view: (doc_id, tok, pos) with
-# positions assigned AFTER stop-word removal (IIM:173-184).
+# positions assigned AFTER stop-word removal (IIM:173-184). The split
+# class is the engine's own TOKEN_SPLIT_RE, which RE2 reads the same
+# way Java and Python do.
 # docs_where restricts the corpus (compacted-index oracles).
 
 
@@ -33,8 +36,8 @@ def make_toks_cte(
     return f"""
 raw AS (
   SELECT doc_id,
-         unnest(regexp_split_to_array(lower({text_expr}), '[\\s,.;?!]+')) AS tok,
-         generate_subscripts(regexp_split_to_array(lower({text_expr}), '[\\s,.;?!]+'), 1) AS ord
+         unnest(regexp_split_to_array(lower({text_expr}), '{TOKEN_SPLIT_RE}')) AS tok,
+         generate_subscripts(regexp_split_to_array(lower({text_expr}), '{TOKEN_SPLIT_RE}'), 1) AS ord
   FROM documents{w}
 ),
 toks AS (

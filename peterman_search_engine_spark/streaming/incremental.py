@@ -66,11 +66,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.indexer import (
-    DEFAULT_BLOCK_SIZE,
-    postings_from_tokens,
-    tokenize_corpus,
-)
+from ..functions.analysis import tokens_expr
+from ..operators.indexer import DEFAULT_BLOCK_SIZE, postings_from_corpus
 from ..plans.storage import read_table
 
 
@@ -224,10 +221,12 @@ def ingest_batch(
         batch_df, ["conv_id", "turn_idx"]
     ).withColumn("doc_id", F.col("doc_id") + F.lit(base))
     corpus = assigned.select("doc_id", "text")
-    toks = tokenize_corpus(corpus, stem=cfg["stem"]).localCheckpoint(eager=True)
+    # stemming never changes token counts, so doc lengths come from the
+    # pure-JVM tokenizer expression, as in every other build
+    doc_len = F.size(tokens_expr("text"))
 
-    lens = toks.agg(
-        F.count("*").alias("n"), F.sum(F.size("tokens")).alias("total")
+    lens = assigned.agg(
+        F.count("*").alias("n"), F.sum(doc_len).alias("total")
     ).collect()[0]
     n_batch, len_batch = int(lens["n"]), int(lens["total"] or 0)
 
@@ -236,11 +235,9 @@ def ingest_batch(
     # by conv_id hash so that probe partition-prunes
     from ..operators.spell import _bucket_expr
 
-    doc_map = (
-        assigned.select("conv_id", "turn_idx", "doc_id")
-        .join(toks.select("doc_id", F.size("tokens").alias("doc_len")), "doc_id")
-        .withColumn("bucket", _bucket_expr(F.col("conv_id"), DOC_MAP_BUCKETS))
-    )
+    doc_map = assigned.select(
+        "doc_id", "conv_id", "turn_idx", doc_len.alias("doc_len")
+    ).withColumn("bucket", _bucket_expr(F.col("conv_id"), DOC_MAP_BUCKETS))
     doc_map.write.mode("overwrite").partitionBy("bucket").parquet(
         os.path.join(index_dir, "doc_map", f"batch={batch_id}")
     )
@@ -293,9 +290,10 @@ def ingest_batch(
     # raw_positions=False: same persisted contract as plans.checkpoint
     # — positions live on disk only as the per-(term,doc) delta+varint
     # blob, and the nested arrays are never built
-    sp = postings_from_tokens(
-        toks,
+    sp = postings_from_corpus(
+        corpus,
         avg_len=avg_len,
+        stem=cfg["stem"],
         positional=cfg["positional"],
         docs_per_segment=cfg["docs_per_segment"],
         block_size=cfg["block_size"],
@@ -303,7 +301,7 @@ def ingest_batch(
     )
     gdir = os.path.join(index_dir, "postings", f"group=stream_{batch_id}")
     sp.write.mode("overwrite").parquet(gdir)
-    toks.select("doc_id", F.size("tokens").alias("doc_len")).write.mode(
+    assigned.select("doc_id", doc_len.alias("doc_len")).write.mode(
         "overwrite"
     ).parquet(os.path.join(index_dir, "doc_stats", f"batch={batch_id}"))
 

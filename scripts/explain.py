@@ -13,7 +13,10 @@ Checks (each printed with the relevant plan excerpt):
 5. WholeStageCodegen covers the JVM doc-length pass;
 6. phrase search decodes positions in the JVM: its plan has no
    ``ArrowEvalPython``/``BatchEvalPython`` node (markers prefixed
-   ``!`` must be absent).
+   ``!`` must be absent);
+7. the shuffled posting build runs the Arrow kernel as a
+   ``FlatMapGroupsInArrow``, with no pandas group map and no
+   per-row Python UDF.
 
 Usage: ``python scripts/explain.py [out.md]`` — writes markdown to
 stdout or the given file. Run from the repo root.
@@ -45,6 +48,7 @@ def main() -> None:
     from peterman_search_engine_spark.operators import query as Q
     from peterman_search_engine_spark.operators.indexer import (
         postings_from_aligned_corpus,
+        postings_from_corpus,
     )
     from peterman_search_engine_spark.plans.checkpoint import (
         build_index_checkpointed,
@@ -85,6 +89,19 @@ def main() -> None:
         f"{aligned_plan.count('(2) Exchange') + aligned_plan.count('(3) Exchange')}",
         aligned_plan,
         ["MapInArrow"],
+    ))
+
+    shuffled = postings_from_corpus(
+        corpus, avg_len=20.0, stem=False, raw_positions=False
+    )
+    sections.append((
+        "Shuffled posting build — ONE text Exchange by segment, then "
+        "each segment's Arrow columns go through the posting-build "
+        "kernel (FlatMapGroupsInArrow); no pandas group map and no "
+        "per-row Python UDF",
+        formatted(shuffled),
+        ["FlatMapGroupsInArrow", "!FlatMapGroupsInPandas",
+         "!ArrowEvalPython", "!BatchEvalPython"],
     ))
 
     prefix = Q.search_prefix(idx, "st")

@@ -3,8 +3,9 @@ aggregation bounds the straggler a naive global groupBy(term) creates.
 
 The north rule calls for "merge segment postings via salted
 repartition-by-term to defuse hot-term skew". The shipped design
-(indexer.postings_from_tokens) keys every posting aggregation by
-(segment, term-bucket) — the doc-range segment id IS the salt, so a
+(indexer.postings_from_corpus) shuffles the corpus text by segment
+alone and builds each segment's posting rows in one Arrow kernel call —
+the doc-range segment id IS the salt (there is no term bucket), so a
 term planted in 50% of all docs still lands in rows of at most
 docs_per_segment entries, and no reducer task ever holds a whole hot
 posting list. The naive design every first Spark port writes —
@@ -12,19 +13,19 @@ posting list. The naive design every first Spark port writes —
 token stream — concentrates each hot term's full posting list (~n/2
 entries here) in ONE reducer task.
 
-Three legs, interleaved, on the SAME tokenized input (8 hot terms in
-~50% of ``--n-docs`` docs each — ``sources.regime``, the WAND-study
-corpus):
+Three legs, interleaved, on the SAME corpus (8 hot terms in ~50% of
+``--n-docs`` docs each — ``sources.regime``, the WAND-study corpus;
+naive and salted read its checkpointed tokens, shipped its text):
 
 * ``naive``   — groupBy(term, doc_id) → groupBy(term) collect_list:
   the strawman; each hot term's full list funnels through one task;
 * ``salted``  — the IDENTICAL declarative plan with the segment id
   added to both keys: the only changed variable is the salt, so the
   straggler delta is attributable to it;
-* ``shipped`` — the production ``postings_from_tokens`` path (one
-  shuffle on (segment, term-bucket) + Arrow applyInPandas assembly,
-  including blob encode — more total work per row, but the same
-  bounded-key property).
+* ``shipped`` — the production ``postings_from_corpus`` path over the
+  corpus text (one text shuffle by segment + the Arrow posting-build
+  kernel, including tokenizing and blob encode — more total work per
+  row, but the same bounded-key property).
 
 For each leg: wall seconds per rep (median headline), and per-task
 executorRunTime / GC / peak-memory quantiles from Spark's own REST
@@ -168,7 +169,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from peterman_search_engine_spark.operators.indexer import (
-        postings_from_tokens,
+        postings_from_corpus,
         tokenize_corpus,
     )
     from peterman_search_engine_spark.plans.session import get_spark
@@ -222,8 +223,8 @@ def main() -> None:
         return _two_phase(["segment", "term"], ["segment", "term"])
 
     def shipped():
-        sp = postings_from_tokens(
-            toks, avg_len=avg_len, positional=False,
+        sp = postings_from_corpus(
+            corpus, avg_len=avg_len, stem=False, positional=False,
             docs_per_segment=args.docs_per_segment,
         )
         return sp.agg(

@@ -38,6 +38,53 @@ def test_punctuation_tokenizer_golden():
     assert _analyze_py("everyone's door", stem=False) == ["everyone's", "door"]
 
 
+# ASCII and Unicode characters on both sides of the "is it whitespace?"
+# line: Java's \s holds \t \x0b \x0c but not \x1c-\x1f; Python's
+# Unicode \s also holds \x1c-\x1f, \x85, \xa0, \u2003 and \u3000; RE2's
+# \s lacks \x0b.
+_SPLIT_PROBES = ["\t", "\x0b", "\x0c", "\x1c", "\x1d", "\x1e", "\x1f",
+                 "\x85", "\xa0", "\u2003", "\u3000"]
+
+
+def test_split_class_agrees_across_engines(spark):
+    """Every analyzer that splits text — the JVM expression
+    (doc_stats), the Python analyzer (kernel fallback, OracleIndex), the
+    DuckDB oracle SQL and, for ASCII, the byte tokenizer — counts the
+    same tokens in "alpha<c>beta gamma"."""
+    import duckdb
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from peterman_search_engine_spark.functions.analysis import (
+        tokenize_block,
+        tokens_expr,
+    )
+    from peterman_search_engine_spark.oracle.sqlgen import DL_CTE, TOKS_CTE
+
+    rows = [(i, f"alpha{c}beta gamma") for i, c in enumerate(_SPLIT_PROBES)]
+    jvm = {
+        r["doc_id"]: r["n"]
+        for r in spark.createDataFrame(rows, "doc_id long, text string")
+        .select("doc_id", F.size(tokens_expr("text")).alias("n"))
+        .collect()
+    }
+    con = duckdb.connect()
+    con.register("documents", pa.table(
+        {"doc_id": [d for d, _ in rows], "text": [t for _, t in rows]}
+    ))
+    sql = dict(
+        con.execute(f"WITH {TOKS_CTE}, {DL_CTE} SELECT doc_id, len FROM dl").fetchall()
+    )
+    for d, text in rows:
+        py = len(_analyze_py(text, stem=False))
+        assert (jvm[d], sql[d]) == (py, py), repr(_SPLIT_PROBES[d])
+        if text.isascii():
+            arr = pa.array([text])
+            offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)[:2]
+            dat = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
+            assert list(tokenize_block(dat, offs, stem=False)[4]) == [py]
+
+
 def test_porter_stemmer_golden():
     # PorterStemmerTest.java:20-27 — "stemming is an important concept
     # in computer science" -> "stem is an import concept in comput scienc"

@@ -251,6 +251,41 @@ def test_streaming_crash_before_manifest_hides_uncommitted_data(spark, tmp_path)
     assert sorted(r["doc_id"] for r in search_or(idx, ["engine"]).collect()) == [1, 2, 3]
 
 
+def _executed_plans(spark) -> dict[int, str]:
+    """Physical plan of every SQL execution the session has run."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    plans = {}
+    while it.hasNext():
+        e = it.next()
+        plans[e.executionId()] = e.physicalPlanDescription()
+    return plans
+
+
+def test_ingest_batch_runs_no_python_eval_or_pandas_group_map(spark, tmp_path):
+    """Every SQL execution of one upserting ``ingest_batch`` call
+    (stemmed, positional) stays off the row-wise Python paths: no plan
+    has an ``ArrowEvalPython``/``BatchEvalPython`` analyzer UDF or a
+    pandas group map. The posting write runs the Arrow kernel."""
+    index_dir = str(tmp_path / "sidx_plans")
+    batches = [
+        [("ca", 0, "Alpha engines running"), ("cb", 0, "beta engine")],
+        [("ca", 0, "alpha engines ran again"), ("cc", 0, "gamma engine")],
+    ]
+    for i, rows in enumerate(batches):
+        before = _executed_plans(spark)
+        ingest_batch(
+            spark.createDataFrame(rows, "conv_id string, turn_idx int, text string"),
+            index_dir, i, docs_per_segment=2,
+        )
+        plans = [p for k, p in _executed_plans(spark).items() if k not in before]
+        for plan in plans:
+            for node in ("ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas"):
+                assert node not in plan, plan
+        assert any("FlatMapGroupsInArrow" in p for p in plans)
+    assert load_streaming_index(spark, index_dir).tombstones is not None
+
+
 def test_streaming_ingest_never_rescans_prior_groups(spark, split_input, tmp_path):
     """Per-batch ingest cost must be O(batch), not O(index): corrupt
     batch 0's posting group and term_stats delta on disk — if batch 1's

@@ -4,7 +4,9 @@
   on real testdata, edge cases, and random ASCII fuzz;
 * ``delta_varint_encode_grouped`` byte-parity with the per-list codec;
 * ``postings_from_aligned_corpus`` (zero-shuffle mapInArrow build)
-  content-equality with the shuffled ``postings_from_corpus`` build.
+  content-equality with the shuffled ``postings_from_corpus`` build;
+* every entry point into the posting-build kernel (including streaming
+  ingest) against postings computed independently from ``OracleIndex``.
 """
 
 from __future__ import annotations
@@ -147,14 +149,13 @@ def test_aligned_build_matches_shuffled(spark):
 
 def test_non_ascii_corpus_fallback(spark):
     """Unicode text routes through the per-string analyzer fallback in
-    BOTH build strategies; results must agree with the declarative
-    JVM tokenizer path (which handles unicode natively)."""
+    BOTH build entry points; results must agree with the independent
+    pure-Python ``OracleIndex`` postings."""
     from peterman_search_engine_spark.operators.indexer import (
         postings_from_aligned_corpus,
         postings_from_corpus,
-        postings_from_tokens_agg,
-        tokenize_corpus,
     )
+    from peterman_search_engine_spark.oracle.pyoracle import OracleIndex
 
     rows = [
         (0, "héllo wörld héllo"),
@@ -181,11 +182,12 @@ def test_non_ascii_corpus_fallback(spark):
             .collect()
         }
 
-    jvm = canon(
-        postings_from_tokens_agg(
-            tokenize_corpus(docs, stem=False), avg_len=4.0, docs_per_segment=2
-        )
-    )
+    oracle = OracleIndex(rows, stem=False)
+    want = {
+        (t, d, len(ps), "[" + ", ".join(map(str, ps)) + "]")
+        for t, by_doc in oracle.postings.items()
+        for d, ps in by_doc.items()
+    }
     fused = canon(
         postings_from_corpus(
             docs, avg_len=4.0, stem=False, positional=True, docs_per_segment=2
@@ -199,8 +201,160 @@ def test_non_ascii_corpus_fallback(spark):
             positional=True,
         )
     )
-    assert jvm == fused == aligned
-    assert any(t == "héllo" for t, *_ in jvm)
+    assert want == fused == aligned
+    assert any(t == "héllo" for t, *_ in want)
+
+
+# Kernel-vs-oracle corpus: ASCII docs, non-ASCII docs (their segment
+# takes the per-string fallback), an empty and an all-stop-word doc,
+# and one term ("kernel") in 13 docs — several blocks at block_size 4.
+_KERNEL_DOCS = [
+    "The kernel builds posting lists; kernel, kernel!",
+    "Segments flush through one kernel routine.",
+    "kernel",
+    "",
+    "Varint blobs and block bounds come from the kernel.",
+    "the and of it",
+    "A kernel test: positions, tfs, blobs?",
+    "Running builds running kernels run kernel.",
+    "kernel héllo wörld héllo",
+    "naïve kernel approach",
+    "kernel 日本語 テスト 日本語",
+    "plain kernel text here",
+    "kernel çedilla kernel",
+    "kernel at the end",
+    "no common term in this one",
+    "last ascii document, stemmed words: indexing indexes indexed",
+    "streaming ingest shares the same kernel",
+    "upserts rebuild through it too",
+]
+_KERNEL_DPS = 8
+_KERNEL_BLOCK = 4
+
+
+def _kernel_expected(oracle, seg_of):
+    """Posting rows keyed by (segment, term), computed from the
+    oracle's postings and lengths with the codec and the BM25 factor
+    alone — no build code."""
+    from peterman_search_engine_spark.functions.codec import block_offsets
+    from peterman_search_engine_spark.operators.indexer import (
+        _bm25_tf_part,
+        encode_positions,
+    )
+
+    want = {}
+    for term, by_doc in oracle.postings.items():
+        for seg in sorted({seg_of[d] for d in by_doc}):
+            ids = sorted(d for d in by_doc if seg_of[d] == seg)
+            poss = [by_doc[d] for d in ids]
+            tfs = [len(p) for p in poss]
+            part = _bm25_tf_part(
+                np.asarray(tfs, np.float64),
+                np.asarray([oracle.doc_len[d] for d in ids], np.float64),
+                oracle.avg_len,
+            )
+            blocks = block_offsets(len(ids), _KERNEL_BLOCK)
+            pos_blob, pos_offsets = encode_positions(poss)
+            want[(seg, term)] = {
+                "df": len(ids),
+                "cf": sum(tfs),
+                "doc_ids": ids,
+                "tfs": tfs,
+                "positions": poss,
+                "blob": delta_varint_encode(ids),
+                "pos_blob": pos_blob,
+                "pos_offsets": pos_offsets.tolist(),
+                "block_starts": [ids[s] for s, _ in blocks],
+                "block_ubs": [float(part[s:e].max()) for s, e in blocks],
+            }
+    return want
+
+
+def _kernel_rows(df):
+    rows = {}
+    for r in df.collect():
+        row = r.asDict()
+        key = (row.pop("segment"), row.pop("term"))
+        assert key not in rows, key
+        for c in ("blob", "pos_blob"):
+            row[c] = bytes(row[c])
+        rows[key] = row
+    return rows
+
+
+def _check_kernel_rows(got, oracle, *, fixed_segments):
+    # each doc lives in exactly one segment; segments are doc_id ranges
+    seg_of = {}
+    for (seg, _), row in got.items():
+        for d in row["doc_ids"]:
+            assert seg_of.setdefault(d, seg) == seg, d
+    if fixed_segments:
+        assert all(s == d // _KERNEL_DPS for d, s in seg_of.items())
+    want = _kernel_expected(oracle, seg_of)
+    assert set(got) == set(want)
+    for key, row in got.items():
+        for col, val in want[key].items():
+            if col in row:
+                assert row[col] == val, (key, col)
+
+
+@pytest.mark.parametrize("stem", [False, True])
+def test_kernel_matches_oracle_postings(spark, tmp_path, stem):
+    """Every entry point into the posting-build kernel — the shuffled
+    ``postings_from_corpus``, the zero-shuffle
+    ``postings_from_aligned_corpus`` and streaming ``ingest_batch`` —
+    writes exactly the posting rows an independent computation from
+    ``OracleIndex.postings`` gives: doc_ids, tfs, positions, the
+    delta+varint blobs and the per-block starts and BM25 upper bounds
+    (over the oracle's doc lengths)."""
+    from peterman_search_engine_spark.operators.indexer import (
+        postings_from_aligned_corpus,
+        postings_from_corpus,
+    )
+    from peterman_search_engine_spark.oracle.pyoracle import OracleIndex
+    from peterman_search_engine_spark.streaming.incremental import (
+        fold_stats,
+        ingest_batch,
+    )
+
+    rows = list(enumerate(_KERNEL_DOCS))
+    oracle = OracleIndex(rows, stem=stem)
+    assert max(oracle.df(t) for t in oracle.postings) > 2 * _KERNEL_BLOCK
+    assert len(_KERNEL_DOCS) > 2 * _KERNEL_DPS
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    common = dict(
+        avg_len=oracle.avg_len, stem=stem, positional=True,
+        block_size=_KERNEL_BLOCK,
+    )
+
+    shuffled = postings_from_corpus(
+        docs, docs_per_segment=_KERNEL_DPS, raw_positions=True, **common
+    )
+    _check_kernel_rows(_kernel_rows(shuffled), oracle, fixed_segments=True)
+
+    aligned = postings_from_aligned_corpus(
+        docs.repartitionByRange(3, "doc_id"), raw_positions=False, **common
+    )
+    _check_kernel_rows(_kernel_rows(aligned), oracle, fixed_segments=False)
+
+    batch = spark.createDataFrame(
+        [(f"c{d:03d}", 0, t) for d, t in rows],
+        "conv_id string, turn_idx int, text string",
+    )
+    idx = str(tmp_path / "stream")
+    ingest_batch(
+        batch, idx, 0, stem=stem, positional=True,
+        docs_per_segment=_KERNEL_DPS, block_size=_KERNEL_BLOCK,
+    )
+    stats = fold_stats(idx)
+    assert (stats["n_docs"], stats["avg_len"]) == (oracle.n_docs, oracle.avg_len)
+    streamed = spark.read.parquet(f"{idx}/postings").drop("group")
+    _check_kernel_rows(_kernel_rows(streamed), oracle, fixed_segments=True)
+    doc_stats = {
+        r["doc_id"]: r["doc_len"]
+        for r in spark.read.parquet(f"{idx}/doc_stats").collect()
+    }
+    assert doc_stats == oracle.doc_len
 
 
 def test_assign_dense_doc_ids_no_duplicates_many_partitions(spark):
