@@ -226,14 +226,11 @@ class InvertedIndex:
     def num_segments(self) -> int:
         return self.postings.select("segment").distinct().count()
 
-    def bm25_idf_col(self):
-        """idf = ln(1 + (N - df + 0.5)/(df + 0.5)) as a Column over
-        term_stats.df."""
-        return F.log(
-            F.lit(1.0)
-            + (F.lit(float(self.n_docs)) - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-        )
+    def bm25_idf_sql(self) -> str:
+        """idf = ln(1 + (N - df + 0.5)/(df + 0.5)) as Spark SQL text
+        over term_stats.df."""
+        n = f"{float(self.n_docs)!r}D"
+        return f"ln(1.0D + ({n} - df + 0.5D) / (df + 0.5D))"
 
 
 def tokenize_corpus(corpus: DataFrame, *, stem: bool = True) -> DataFrame:

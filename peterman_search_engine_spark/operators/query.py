@@ -2,24 +2,31 @@
 
 Every query is a declarative DataFrame plan over the index tables:
 
-* query terms (tiny) join the postings via an IN-filter — Parquet
+* query terms (tiny) reach the postings as an IN-filter — Parquet
   predicate pushdown prunes files by the ``term`` column, the
   Spark-side analogue of the reference's per-segment dictionary skip
   (``InvertedIndexManager.java:390, 617``).
-* doc-level aggregation is a hash aggregate (Catalyst partial+final —
-  exactly the reference's per-segment accumulator maps, ``IIM:614-638``,
-  but distributed).
+* every ranked scorer — TF-IDF, BM25 (and so RM3, more-like-this,
+  grouped and hybrid retrieval), BM25F, LM-Dirichlet, batch BM25 and
+  WAND's exact rescore — runs one plan, :func:`score_terms`: weighted
+  ``term_stats`` rows, exploded postings, one broadcast join on term,
+  a per-(qid, doc) hash aggregate (Catalyst partial+final — exactly
+  the reference's per-segment accumulator maps, ``IIM:614-638``, but
+  distributed). A scorer differs only in its weights and its Spark
+  SQL sums and score expression.
 * top-k is ``orderBy(desc(score), doc_id).limit(k)`` →
   ``TakeOrderedAndProject`` (per-partition bounded heap + driver merge;
   the distributed form of the reference's MinMaxPriorityQueue,
   ``IIM:574-582``). Tiebreak is the canonical (-score, doc_id) (§2.4).
 * block-max WAND (north-star addition) prunes posting blocks whose
   stored upper bound cannot beat the running k-th score — implemented
-  in ``wand.py`` as an applyInPandas over per-segment posting groups.
+  in ``wand.py``, whose exact rescore is :func:`score_terms` too.
 """
 
 from __future__ import annotations
 
+import re
+from collections import Counter
 from functools import reduce
 
 import numpy as np
@@ -37,10 +44,28 @@ def _analyzed(index: InvertedIndex, terms: list[str]) -> list[str]:
     return analyze_query(terms, stem=index.stem)
 
 
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal. Analyzed terms can keep
+    ``'`` and ``\\`` (the analyzer splits on neither), so both are
+    escaped."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_double(x: float) -> str:
+    """``x`` as an exact Spark SQL double literal (a bare ``1.2`` would
+    parse as a decimal)."""
+    return f"{float(x)!r}D"
+
+
+def _terms_in(terms) -> Column:
+    """``term IN (...)`` as one parsed predicate; it pushes down to the
+    Parquet scan of a persisted index."""
+    return F.expr(f"term IN ({', '.join(_sql_str(t) for t in sorted(set(terms)))})")
+
+
 def _postings_for(index: InvertedIndex, toks: list[str]) -> DataFrame:
-    """Postings restricted to the query terms. The isin filter pushes
-    down to the Parquet scan of a persisted index."""
-    return index.postings.filter(F.col("term").isin(list(set(toks))))
+    """Postings restricted to the query terms."""
+    return index.postings.filter(_terms_in(toks))
 
 
 def _live(index: InvertedIndex, df: DataFrame) -> DataFrame:
@@ -496,20 +521,104 @@ def suggest_spelling(
     )
 
 
-# -- Q5-Q8: TF-IDF (reference semantics) --------------------------------------
+# -- Ranked retrieval: one scoring plan ----------------------------------------
 
-def _weighted_terms(index: InvertedIndex, weights: dict[str, float]) -> DataFrame:
-    """The query terms' ``term_stats`` rows, each with its query weight
-    as ``qtf``. The weights ride along as a literal map rather than a
-    joined query-term table: joining even a one-row local table costs
-    every query a broadcast job of its own. Terms absent from the
-    dictionary drop out, as an inner join would drop them."""
-    qtf = F.create_map(
-        *[F.lit(x) for t, w in sorted(weights.items()) for x in (t, float(w))]
+def _query_weights(index: InvertedIndex, terms: list[str]) -> dict[str, float]:
+    """Analyzed query terms with their query-tf as weight: a repeated
+    term counts once per occurrence (IIM:674-677)."""
+    return {t: float(n) for t, n in Counter(_analyzed(index, terms)).items()}
+
+
+def bm25_tf_sql(tf: str, dl: str, avg_len: float) -> str:
+    """BM25's per-posting tf-part ``tf·(k1+1) / (tf + k1·(1-b+b·dl/avg))``
+    (k1=1.2, b=0.75) as Spark SQL text over the SQL expressions ``tf``
+    and ``dl``. The same factor, computed by ``indexer._bm25_tf_part``,
+    is what the stored block upper bounds hold. The text is a bare
+    product, so ``w * <tf-part>`` multiplies left to right."""
+    return (
+        f"{tf} * {_sql_double(K1 + 1)} / ({tf} + {_sql_double(K1)} * "
+        f"({_sql_double(1 - B)} + {_sql_double(B)} * {dl} / {_sql_double(avg_len)}))"
     )
-    return index.term_stats.filter(F.col("term").isin(sorted(weights))).withColumn(
-        "qtf", qtf[F.col("term")]
+
+
+def score_terms(
+    index: InvertedIndex,
+    weights: dict[int, dict[str, float]],
+    sums: dict[str, str],
+    score: str,
+    *,
+    cols: tuple[str, ...] = ("tfs",),
+    postings: DataFrame | None = None,
+    docs: DataFrame | None = None,
+) -> DataFrame:
+    """The scoring plan every ranked query runs — the term-at-a-time
+    accumulator of the reference (IIM:614-650), for a whole query log
+    at once. ``weights`` is ``{qid: {term: query weight}}``; a single
+    query is the log ``{0: w}``. Returns (qid, doc_id, score).
+
+    ``sums`` maps names to per-posting Spark SQL expressions, summed
+    per (qid, doc); ``score`` is SQL over those names (and ``doc_len``)
+    giving the doc's score. A posting row sees ``term``, ``doc_id``,
+    the ``term_stats`` columns (``df``, ``cf``), ``qid``, its weight
+    ``qw``, the zipped posting ``cols`` (``tfs`` as ``tf``, others by
+    name) and, when any expression names it, ``doc_len``.
+
+    The plan:
+
+    1. the weights side is ``term_stats`` IN-filtered to the query
+       terms, each row fanned out to its queries by ``inline``-ing one
+       literal ``map(term -> array(named_struct(qid, qw)))`` (SQL text:
+       the parser builds it in one call, where Column literals cost a
+       driver-to-JVM call each); terms missing from the dictionary
+       drop out;
+    2. postings (``postings`` if given: a caller's scoped scan) are
+       IN-filtered and exploded over ``arrays_zip(doc_ids, *cols)``,
+       then restricted to the ``docs`` candidates if given;
+    3. ``doc_stats`` is joined only when an expression names
+       ``doc_len``, before the fan-out, so a posting meets it once;
+    4. broadcast join on term, hash-aggregate per (qid, doc_id), with
+       ``doc_len`` as a key only when the score expression names it,
+       the score expression, then the tombstone anti-join.
+    """
+    terms = sorted({t for w in weights.values() for t in w})
+    if not terms:
+        return local_frame(
+            index.postings.sparkSession, [], "qid long, doc_id long, score double"
+        )
+    fan: dict[str, list[str]] = {}
+    for qid, w in sorted(weights.items()):
+        for t, x in sorted(w.items()):
+            fan.setdefault(t, []).append(
+                f"named_struct('qid', {int(qid)}L, 'qw', {_sql_double(x)})"
+            )
+    entries = ", ".join(f"{_sql_str(t)}, array({', '.join(v)})" for t, v in fan.items())
+    in_terms = _terms_in(terms)
+    wt = index.term_stats.filter(in_terms).select(
+        "term", "df", "cf", F.expr(f"inline(map({entries})[term])")
     )
+    p = (index.postings if postings is None else postings).filter(in_terms)
+    hits = p.select(
+        "term", F.explode(F.arrays_zip("doc_ids", *cols)).alias("_z")
+    ).select(
+        "term",
+        F.col("_z.doc_ids").alias("doc_id"),
+        *[F.col(f"_z.{c}").alias("tf" if c == "tfs" else c) for c in cols],
+    )
+    if docs is not None:
+        # restrict BEFORE the agg shuffle: only candidate docs move
+        hits = hits.join(docs, "doc_id")
+    doc_len = re.compile(r"\bdoc_len\b")
+    if any(doc_len.search(e) for e in [score, *sums.values()]):
+        hits = hits.join(index.doc_stats.select("doc_id", "doc_len"), "doc_id")
+    # only a score over doc_len carries it through the agg shuffle
+    keys = ["qid", "doc_id"] + (["doc_len"] if doc_len.search(score) else [])
+    scored = (
+        hits.join(F.broadcast(wt), "term")
+        .groupBy(*keys)
+        .agg(*[F.expr(f"sum({e})").alias(n) for n, e in sums.items()])
+        .select("qid", "doc_id", F.expr(score).alias("score"))
+    )
+    return _live(index, scored)
 
 
 def tfidf_scores(index: InvertedIndex, terms: list[str]) -> DataFrame:
@@ -517,40 +626,14 @@ def tfidf_scores(index: InvertedIndex, terms: list[str]) -> DataFrame:
     query weight = query-token-count × idf (IIM:671-689); score =
     dot / sqrt(Σ_query-terms (tf·idf)²) (IIM:629-650 — the norm runs
     over query-term components only, §2.4). Returns (doc_id, score)."""
-    toks = _analyzed(index, terms)
-    spark = index.postings.sparkSession
-    if not toks:
-        return local_frame(spark, [], "doc_id long, score double")
-    qtf: dict[str, float] = {}
-    for t in toks:
-        qtf[t] = qtf.get(t, 0.0) + 1.0
-    n_docs = float(index.n_docs)
     # idf from GLOBAL term stats (pass 1, IIM:543-569)
-    idf = (
-        _weighted_terms(index, qtf)
-        .withColumn("idf", F.log10(F.lit(n_docs) / F.col("df")))
-        .select("term", "qtf", "idf")
-    )
-    p = _postings_for(index, list(qtf))
-    hits = p.select(
-        "term", F.explode(F.arrays_zip("doc_ids", "tfs")).alias("_z")
-    ).select(
-        "term", F.col("_z.doc_ids").alias("doc_id"), F.col("_z.tfs").alias("tf")
-    )
-    w = F.col("tf") * F.col("idf")
-    scored = (
-        hits.join(F.broadcast(idf), "term")
-        .withColumn("_dot", w * F.col("qtf") * F.col("idf"))
-        .withColumn("_len", w * w)
-        .groupBy("doc_id")
-        .agg(F.sum("_dot").alias("dot"), F.sum("_len").alias("len"))
-        .withColumn(
-            "score",
-            F.when(F.col("len") > 0, F.col("dot") / F.sqrt("len")).otherwise(F.lit(0.0)),
-        )
-        .select("doc_id", "score")
-    )
-    return _live(index, scored)
+    idf = f"log10({_sql_double(index.n_docs)} / df)"
+    return score_terms(
+        index,
+        {0: _query_weights(index, terms)},
+        {"dot": f"tf * {idf} * qw * {idf}", "len": f"(tf * {idf}) * (tf * {idf})"},
+        "if(len > 0, dot / sqrt(len), 0D)",
+    ).drop("qid")
 
 
 def search_tfidf(index: InvertedIndex, terms: list[str], top_k: int | None) -> DataFrame:
@@ -561,6 +644,12 @@ def search_tfidf(index: InvertedIndex, terms: list[str], top_k: int | None) -> D
 
 # -- BM25 (the rebuild's primary ranker) ---------------------------------------
 
+def bm25_contrib_sql(index: InvertedIndex) -> str:
+    """One posting's BM25 contribution ``qw · idf · tf-part``, with
+    idf = ln(1+(N-df+.5)/(df+.5)) from the dictionary row."""
+    return f"qw * {index.bm25_idf_sql()} * {bm25_tf_sql('tf', 'doc_len', index.avg_len)}"
+
+
 def bm25_scores_weighted(
     index: InvertedIndex, weights: dict[str, float]
 ) -> DataFrame:
@@ -568,34 +657,9 @@ def bm25_scores_weighted(
     weights (the general form: plain queries use integer query-tf,
     relevance-feedback expansion uses fractional weights). k1=1.2,
     b=0.75; idf = ln(1+(N-df+.5)/(df+.5)). Returns (doc_id, score)."""
-    spark = index.postings.sparkSession
-    if not weights:
-        return local_frame(spark, [], "doc_id long, score double")
-    idf = (
-        _weighted_terms(index, weights)
-        .withColumn("idf", index.bm25_idf_col())
-        .select("term", "qtf", "idf")
-    )
-    p = _postings_for(index, list(weights))
-    hits = p.select(
-        "term", F.explode(F.arrays_zip("doc_ids", "tfs")).alias("_z")
-    ).select(
-        "term", F.col("_z.doc_ids").alias("doc_id"), F.col("_z.tfs").alias("tf")
-    )
-    dl = index.doc_stats
-    denom = F.col("tf") + F.lit(K1) * (
-        F.lit(1 - B) + F.lit(B) * F.col("doc_len") / F.lit(index.avg_len)
-    )
-    contrib = F.col("qtf") * F.col("idf") * F.col("tf") * F.lit(K1 + 1) / denom
-    return _live(
-        index,
-        hits.join(F.broadcast(idf), "term")
-        .join(dl, "doc_id")
-        .withColumn("_c", contrib)
-        .groupBy("doc_id")
-        .agg(F.sum("_c").alias("score"))
-        .select("doc_id", "score"),
-    )
+    return score_terms(
+        index, {0: weights}, {"score": bm25_contrib_sql(index)}, "score"
+    ).drop("qid")
 
 
 def bm25_scores(index: InvertedIndex, terms: list[str]) -> DataFrame:
@@ -603,11 +667,7 @@ def bm25_scores(index: InvertedIndex, terms: list[str]) -> DataFrame:
     term multiplicity multiplies the contribution (consistent with the
     reference's query-tf treatment, IIM:674-677).
     Returns (doc_id, score)."""
-    toks = _analyzed(index, terms)
-    qtf: dict[str, float] = {}
-    for t in toks:
-        qtf[t] = qtf.get(t, 0.0) + 1.0
-    return bm25_scores_weighted(index, qtf)
+    return bm25_scores_weighted(index, _query_weights(index, terms))
 
 
 def search_bm25(index: InvertedIndex, terms: list[str], top_k: int | None) -> DataFrame:

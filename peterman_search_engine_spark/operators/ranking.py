@@ -19,20 +19,32 @@ each as a declarative DataFrame plan over the same positional index:
   top-m tf·idf terms, then run the standard BM25 ranker over them,
   excluding the example itself.
 
-Scale posture: every plan is posting-scan → hash-aggregate → top-k
-(TakeOrderedAndProject). Driver-side state is O(query terms) /
+The module also holds LM-Dirichlet query likelihood, RM3 feedback
+expansion and hybrid BM25 + vector fusion. Every scorer here is the
+one scoring plan, ``query.score_terms`` (BM25F and LM-Dirichlet with
+their own SQL sums; the rest through plain or weighted BM25), then a
+top-k (TakeOrderedAndProject). Driver-side state is O(query terms) /
 O(m terms) / one scalar aggregate row — metadata-sized, the same
 planner-state budget as the BM25/WAND paths.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.session import local_frame
-from .indexer import B, K1, InvertedIndex
-from .query import _analyzed, _live, _postings_for, _weighted_terms, top_k_df
+from .indexer import InvertedIndex
+from .query import (
+    _query_weights,
+    _sql_double,
+    _terms_in,
+    bm25_tf_sql,
+    score_terms,
+    top_k_df,
+)
 
 # head field = analyzed-token positions [0, HEAD_LEN); weights are the
 # classic title-boost shape.
@@ -41,12 +53,14 @@ W_HEAD = 2.0
 W_BODY = 1.0
 
 
-def weighted_doc_len(doc_len, head_len: int = HEAD_LEN,
-                     w_head: float = W_HEAD, w_body: float = W_BODY):
-    """Weighted document length: each head position counts w_head,
-    each body position w_body. Pure Column expression."""
-    h = F.least(doc_len.cast("double"), F.lit(float(head_len)))
-    return F.lit(w_head) * h + F.lit(w_body) * (doc_len.cast("double") - h)
+def weighted_doc_len(doc_len: str = "doc_len", head_len: int = HEAD_LEN,
+                     w_head: float = W_HEAD, w_body: float = W_BODY) -> str:
+    """Weighted document length as Spark SQL text over the SQL
+    expression ``doc_len``: each head position counts w_head, each
+    body position w_body."""
+    dl = f"cast({doc_len} as double)"
+    h = f"least({dl}, {_sql_double(head_len)})"
+    return f"{_sql_double(w_head)} * {h} + {_sql_double(w_body)} * ({dl} - {h})"
 
 
 def bm25f_scores(
@@ -65,57 +79,32 @@ def bm25f_scores(
     field counts once), k1/b as the plain ranker.
 
     The per-field tf split is read from the index's stored position
-    lists — the same arrays the phrase ranker consumes — so BM25F
-    costs one extra array filter per posting, not a re-tokenization.
-    Returns (doc_id, score).
+    lists — the same arrays the phrase ranker consumes — so BM25F is
+    the BM25 plan (``query.score_terms``) exploding ``positions``
+    instead of ``tfs``, plus one JVM array filter per posting, not a
+    re-tokenization. Returns (doc_id, score).
     """
     if not index.positional:
         raise ValueError("bm25f requires a positional index")
-    toks = _analyzed(index, terms)
-    spark = index.postings.sparkSession
-    if not toks:
-        return local_frame(spark, [], "doc_id long, score double")
-    qtf: dict[str, float] = {}
-    for t in toks:
-        qtf[t] = qtf.get(t, 0.0) + 1.0
-    idf = (
-        _weighted_terms(index, qtf)
-        .withColumn("idf", index.bm25_idf_col())
-        .select("term", "qtf", "idf")
-    )
-    p = _postings_for(index, list(qtf))
-    hits = p.select(
-        "term", F.explode(F.arrays_zip("doc_ids", "positions")).alias("_z")
-    ).select(
-        "term",
-        F.col("_z.doc_ids").alias("doc_id"),
-        F.col("_z.positions").alias("pos"),
-    )
-    tf_head = F.size(F.filter("pos", lambda x: x < F.lit(head_len))).cast("double")
-    tf_all = F.size("pos").cast("double")
-    wtf = F.lit(w_head) * tf_head + F.lit(w_body) * (tf_all - tf_head)
-    hits = hits.withColumn("wtf", wtf).drop("pos")
-
+    weights = _query_weights(index, terms)
+    if not weights:
+        return local_frame(index.postings.sparkSession, [], "doc_id long, score double")
     # corpus mean of the weighted doc length: ONE scalar row
     avg_wdl = float(
         index.doc_stats.agg(
-            F.avg(weighted_doc_len(F.col("doc_len"), head_len, w_head, w_body))
+            F.avg(F.expr(weighted_doc_len("doc_len", head_len, w_head, w_body)))
         ).collect()[0][0]
     )
-    wdl = weighted_doc_len(F.col("doc_len"), head_len, w_head, w_body)
-    denom = F.col("wtf") + F.lit(K1) * (
-        F.lit(1 - B) + F.lit(B) * wdl / F.lit(avg_wdl)
+    tf_head = f"cast(size(filter(positions, x -> x < {int(head_len)})) as double)"
+    wtf = (
+        f"({_sql_double(w_head)} * {tf_head} + {_sql_double(w_body)} * "
+        f"(cast(size(positions) as double) - {tf_head}))"
     )
-    contrib = F.col("qtf") * F.col("idf") * F.col("wtf") * F.lit(K1 + 1) / denom
-    return _live(
-        index,
-        hits.join(F.broadcast(idf), "term")
-        .join(index.doc_stats, "doc_id")
-        .withColumn("_c", contrib)
-        .groupBy("doc_id")
-        .agg(F.sum("_c").alias("score"))
-        .select("doc_id", "score"),
-    )
+    wdl = f"({weighted_doc_len('doc_len', head_len, w_head, w_body)})"
+    contrib = f"qw * {index.bm25_idf_sql()} * {bm25_tf_sql(wtf, wdl, avg_wdl)}"
+    return score_terms(
+        index, {0: weights}, {"score": contrib}, "score", cols=("positions",)
+    ).drop("qid")
 
 
 def search_bm25f(
@@ -186,7 +175,7 @@ def more_like_this(
         .groupBy("term")
         .agg(F.count("*").alias("tf"))
     )
-    w = F.col("tf").cast("double") * index.bm25_idf_col()
+    w = F.col("tf").cast("double") * F.expr(index.bm25_idf_sql())
     sel = (
         dtf.join(index.term_stats, "term")
         .withColumn("w_e6", F.round(w * 1_000_000).cast("long"))
@@ -231,14 +220,14 @@ def search_rm3(
     over postings total — the textbook PRF cost. Returns
     (doc_id, score)."""
     from .indexer import tokenize_corpus
-    from .query import bm25_scores, bm25_scores_weighted
+    from .query import bm25_scores_weighted
 
     spark = corpus.sparkSession
-    toks = _analyzed(index, terms)
-    if not toks:
+    weights = _query_weights(index, terms)
+    if not weights:
         return local_frame(spark, [], "doc_id long, score double")
     fb_rows = (
-        bm25_scores(index, terms)
+        bm25_scores_weighted(index, weights)
         .withColumn("score_e6", F.round(F.col("score") * 1_000_000).cast("long"))
         .orderBy(F.desc("score_e6"), F.asc("doc_id"))
         .limit(fb_docs)
@@ -252,25 +241,20 @@ def search_rm3(
         "doc_id long, score_e6 long",
     )
     fb_ids = [r["doc_id"] for r in fb_rows]
-    orig = set(toks)
     strength = (
         tokenize_corpus(corpus.filter(F.col("doc_id").isin(fb_ids)), stem=index.stem)
         .select("doc_id", F.explode("tokens").alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
         .join(F.broadcast(fb), "doc_id")
-        .filter(~F.col("term").isin(sorted(orig)))
+        .filter(~F.col("term").isin(sorted(weights)))
         .groupBy("term")
         .agg(F.sum(F.col("tf") * F.col("score_e6")).alias("strength"))
         .orderBy(F.desc("strength"), F.asc("term"))
         .limit(fb_terms)
     )
-    exp_terms = [r["term"] for r in strength.collect()]  # O(fb_terms)
-    weights: dict[str, float] = {}
-    for t in toks:
-        weights[t] = weights.get(t, 0.0) + 1.0
-    for t in exp_terms:
-        weights[t] = weights.get(t, 0.0) + float(exp_weight)
+    for r in strength.collect():  # O(fb_terms); never an original term
+        weights[r["term"]] = float(exp_weight)
     return top_k_df(bm25_scores_weighted(index, weights), top_k)
 
 
@@ -300,64 +284,32 @@ def lm_dirichlet_scores(
     Query terms absent from the collection (cf = 0) are dropped — they
     shift every doc's score by the same -inf and carry no signal.
 
-    Plan shape is identical to :func:`..query.bm25_scores`: postings
-    IN-scan -> explode -> broadcast join on the O(|q|) term table ->
-    hash aggregate -> join doc_stats. Driver state: the O(|q|)
-    (term, cf) rows and one scalar (|C|). Returns (doc_id, score).
+    The plan is the BM25 plan, ``query.score_terms``, with the matched
+    sum ``qtf·ln(1 + tf/(mu·cf/|C|))`` over the joined term_stats cf and
+    the closed form as its score expression. Driver state: the O(|q|)
+    (term, cf) rows for K and one scalar (|C|). Returns (doc_id, score).
     """
-    toks = _analyzed(index, terms)
+    qtf = _query_weights(index, terms)
     spark = index.postings.sparkSession
-    if not toks:
+    if not qtf:
         return local_frame(spark, [], "doc_id long, score double")
-    qtf: dict[str, int] = {}
-    for t in toks:
-        qtf[t] = qtf.get(t, 0) + 1
     total_c = index.doc_stats.agg(F.sum("doc_len")).collect()[0][0]  # |C|, one scalar
     stats = {
         r["term"]: r["cf"]
-        for r in index.term_stats.filter(
-            F.col("term").isin(list(qtf))
-        ).collect()  # O(|q|) planner state
+        for r in index.term_stats.filter(_terms_in(qtf)).collect()  # O(|q|) planner state
     }
-    import math
-
     live = {t: n for t, n in qtf.items() if stats.get(t, 0) > 0}
     if not live:
         return local_frame(spark, [], "doc_id long, score double")
-    k_const = sum(
-        n * math.log(mu * stats[t] / total_c) for t, n in live.items()
-    )
-    q_total = float(sum(live.values()))
-    qdf = local_frame(
-        spark,
-        [(t, float(n), float(stats[t]) / total_c) for t, n in sorted(live.items())],
-        "term string, qtf double, pc double",
-    )
-    p = _postings_for(index, list(live))
-    hits = p.select(
-        "term", F.explode(F.arrays_zip("doc_ids", "tfs")).alias("_z")
-    ).select(
-        "term", F.col("_z.doc_ids").alias("doc_id"), F.col("_z.tfs").alias("tf")
-    )
-    contrib = F.col("qtf") * F.log(
-        F.lit(1.0) + F.col("tf") / (F.lit(mu) * F.col("pc"))
-    )
-    scored = (
-        hits.join(F.broadcast(qdf), "term")
-        .withColumn("_c", contrib)
-        .groupBy("doc_id")
-        .agg(F.sum("_c").alias("_m"))
-        .join(index.doc_stats, "doc_id")
-        .select(
-            "doc_id",
-            (
-                F.col("_m")
-                + F.lit(k_const)
-                - F.lit(q_total) * F.log(F.col("doc_len") + F.lit(mu))
-            ).alias("score"),
-        )
-    )
-    return _live(index, scored)
+    k_const = sum(n * math.log(mu * stats[t] / total_c) for t, n in live.items())
+    q_total = sum(live.values())
+    mu_sql, c_sql = _sql_double(mu), _sql_double(total_c)
+    return score_terms(
+        index,
+        {0: live},
+        {"m": f"qw * ln(1.0D + tf / ({mu_sql} * (cf / {c_sql})))"},
+        f"m + {_sql_double(k_const)} - {_sql_double(q_total)} * ln(doc_len + {mu_sql})",
+    ).drop("qid")
 
 
 def search_lm_dirichlet(

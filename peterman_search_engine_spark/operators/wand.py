@@ -33,7 +33,9 @@ B. **prune**: a block of term t survives iff
    the true survivors, so exactness is preserved).
 C. **rescore**: exact BM25 restricted to candidate docs, union with
    the seed top-k, global top-k with the canonical (-score, doc_id)
-   tiebreak.
+   tiebreak. Seed and rescore scoring are the one scoring plan,
+   ``query.score_terms``, over scoped postings with the driver
+   weights ``w = qtf·idf``.
 
 Soundness under duplicate (segment, term) rows: a streaming-built
 index carries one posting row per (micro-batch, segment, term), so a
@@ -70,11 +72,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.analysis import analyze_query
 from ..functions.codec import delta_varint_decode
 from ..plans.session import local_frame
-from .indexer import B, K1, InvertedIndex
-from .query import bm25_scores, top_k_df
+from .indexer import InvertedIndex
+from .query import _query_weights, _terms_in, bm25_tf_sql, score_terms, search_bm25, top_k_df
 
 # Break-even posting volume for the pruned plan (Σ df over query
 # terms). MEASURED, not guessed (scripts/wand_regime.py, local[32]):
@@ -111,13 +112,6 @@ DEFAULT_PRUNE_MIN_ENTRIES = 30_000_000
 # mistake — routing exhaustive when pruning would have won a little
 # costs far less than the reverse).
 ESSENTIAL_DF_ROUTE_FRACTION = 0.20
-
-
-def _qtf(toks: list[str]) -> dict[str, int]:
-    out: dict[str, int] = {}
-    for t in toks:
-        out[t] = out.get(t, 0) + 1
-    return out
 
 
 def rid_col() -> Column:
@@ -186,16 +180,15 @@ def bm25_topk_wand(
     ``return_stats`` — stats reports blocks pruned vs decoded (or the
     gate decision) for auditability/bench.
     """
-    toks = analyze_query(terms, stem=index.stem)
+    qtf = _query_weights(index, terms)
     spark = index.postings.sparkSession
 
     def _empty(stats: dict):
         empty = local_frame(spark, [], "doc_id long, score double")
         return (empty, stats) if return_stats else empty
 
-    if not toks:
+    if not qtf:
         return _empty({})
-    qtf = _qtf(toks)
     if block_size is None:
         block_size = index.block_size
 
@@ -204,7 +197,7 @@ def bm25_topk_wand(
         # docs, making the prune unsound for live docs — route to the
         # (tombstone-aware) exhaustive plan; compact_deletes restores
         # WAND by re-encoding blocks over live docs only.
-        res = bm25_topk_exhaustive(index, terms, k)
+        res = search_bm25(index, terms, k)
         if return_stats:
             return res, {"gated_exhaustive": True, "reason": "tombstones"}
         return res
@@ -212,12 +205,10 @@ def bm25_topk_wand(
     # One dictionary lookup serves both the cost gate and the per-term
     # weights (the reference reads the same df numbers from its
     # dictionary slots, IIM:705-715): #query-terms rows.
-    trows = index.term_stats.filter(
-        F.col("term").isin(sorted(qtf))
-    ).select("term", "df").collect()
+    trows = index.term_stats.filter(_terms_in(qtf)).select("term", "df").collect()
     est = int(sum(r["df"] for r in trows))
     if not force_prune and est < prune_min_entries:
-        res = bm25_topk_exhaustive(index, terms, k)
+        res = search_bm25(index, terms, k)
         if return_stats:
             return res, {"gated_exhaustive": True, "est_entries": est}
         return res
@@ -248,8 +239,8 @@ def bm25_topk_wand(
         local_frame(spark, sorted(w.items()), "term string, w double")
     )
 
-    p = index.postings.filter(F.col("term").isin(qterms))
-    meta = block_meta_df(index).filter(F.col("term").isin(qterms))
+    p = index.postings.filter(_terms_in(qterms))
+    meta = block_meta_df(index).filter(_terms_in(qterms))
 
     # JOB 1 — per-(segment, term) max w·ub: MAX across that term's
     # blocks AND across duplicate rows (a doc lives in exactly one
@@ -276,25 +267,15 @@ def bm25_topk_wand(
         ]
     ]
 
+    # exact BM25 over a scoped posting scan: the one scoring plan with
+    # the driver weights w = qtf·idf, so θ and the block bounds rest on
+    # the same w
+    contrib = f"qw * {bm25_tf_sql('tf', 'doc_len', index.avg_len)}"
+
     def _exact(scoped: DataFrame, cand: DataFrame | None = None) -> DataFrame:
-        hits = scoped.select(
-            "term", F.explode(F.arrays_zip("doc_ids", "tfs")).alias("_z")
-        ).select(
-            "term", F.col("_z.doc_ids").alias("doc_id"), F.col("_z.tfs").alias("tf")
-        )
-        if cand is not None:
-            # restrict BEFORE the agg shuffle: only candidate docs move
-            hits = hits.join(cand, "doc_id")
-        denom = F.col("tf") + F.lit(K1) * (
-            F.lit(1 - B) + F.lit(B) * F.col("doc_len") / F.lit(index.avg_len)
-        )
-        return (
-            hits.join(wdf, "term")
-            .join(index.doc_stats, "doc_id")
-            .withColumn("_c", F.col("w") * F.col("tf") * F.lit(K1 + 1) / denom)
-            .groupBy("doc_id")
-            .agg(F.sum("_c").alias("score"))
-        )
+        return score_terms(
+            index, {0: w}, {"score": contrib}, "score", postings=scoped, docs=cand
+        ).drop("qid")
 
     # JOB 2 — the k best seed-segment scores in canonical
     # (-score, doc_id) order, collected (k rows). Docs live in exactly
@@ -343,7 +324,7 @@ def bm25_topk_wand(
     df_by_term = {r["term"]: int(r["df"]) for r in trows}
     ess_df = sum(df_by_term[t] for t in ess)
     if not force_prune and est and ess_df >= ESSENTIAL_DF_ROUTE_FRACTION * est:
-        res = bm25_topk_exhaustive(index, terms, k)
+        res = search_bm25(index, terms, k)
         if return_stats:
             return res, {
                 "gated_exhaustive": True,
@@ -477,8 +458,3 @@ def bm25_topk_wand(
             else 0.0,
         }
     return final
-
-
-def bm25_topk_exhaustive(index: InvertedIndex, terms: list[str], k: int) -> DataFrame:
-    """Non-pruned baseline for equivalence tests and bench A/B."""
-    return top_k_df(bm25_scores(index, terms), k)

@@ -16,7 +16,10 @@ Checks (each printed with the relevant plan excerpt):
    ``!`` must be absent);
 7. the shuffled posting build runs the Arrow kernel as a
    ``FlatMapGroupsInArrow``, with no pandas group map and no
-   per-row Python UDF.
+   per-row Python UDF;
+8. TF-IDF, batch BM25 and LM-Dirichlet run the BM25 scoring plan
+   (``query.score_terms``): pushdown, one broadcast join on term, no
+   Python step.
 
 Usage: ``python scripts/explain.py [out.md]`` — writes markdown to
 stdout or the given file. Run from the repo root.
@@ -76,6 +79,31 @@ def main() -> None:
         "BM25 top-k over the persisted index",
         plan,
         ["PushedFilters", "BroadcastHashJoin", "TakeOrderedAndProject"],
+    ))
+
+    tfidf = Q.search_tfidf(idx, ["spark", "merge"], 10)
+    sections.append((
+        "TF-IDF top-k — the same scoring plan as BM25 "
+        "(query.score_terms) with two sums (dot, len) and no "
+        "doc_stats join",
+        formatted(tfidf),
+        ["PushedFilters", "BroadcastHashJoin", "!ArrowEvalPython",
+         "!BatchEvalPython"],
+    ))
+
+    from peterman_search_engine_spark.operators.batch import batch_bm25_topk
+
+    batch = batch_bm25_topk(
+        idx, {0: ["spark", "merge"], 1: ["vector"], 2: ["merge", "stream"]}, 10
+    )
+    sections.append((
+        "Batch BM25 — a 3-query log in the single-query plan: the "
+        "term_stats rows fan out to their queries through one "
+        "inline'd literal map, then one broadcast join on term, a "
+        "(qid, doc) hash aggregate and a per-qid window rank",
+        formatted(batch),
+        ["PushedFilters", "BroadcastHashJoin", "!ArrowEvalPython",
+         "!BatchEvalPython"],
     ))
 
     aligned = postings_from_aligned_corpus(
@@ -151,12 +179,13 @@ def main() -> None:
 
     lm = search_lm_dirichlet(idx, ["spark", "merge"], 10)
     sections.append((
-        "LM-Dirichlet top-k — identical shape to the BM25 plan "
-        "(postings IN-scan, broadcast O(|q|) term table, hash "
-        "aggregate, bounded top-k); the unmatched-term mass is a "
-        "closed-form column, not extra rows",
+        "LM-Dirichlet top-k — the BM25 plan (query.score_terms) with "
+        "the matched-term log sum over the joined cf and the "
+        "unmatched-term mass as a closed-form score expression, not "
+        "extra rows; no Python step",
         formatted(lm),
-        ["PushedFilters", "BroadcastHashJoin", "TakeOrderedAndProject"],
+        ["PushedFilters", "BroadcastHashJoin", "TakeOrderedAndProject",
+         "!ArrowEvalPython", "!BatchEvalPython"],
     ))
 
     rx = Q.search_regex(idx, "(merg|wind)[a-z]*", 10)

@@ -79,10 +79,8 @@ def main() -> None:
                          "the query to the exhaustive plan")
     args = ap.parse_args()
 
-    from peterman_search_engine_spark.operators.wand import (
-        bm25_topk_exhaustive,
-        bm25_topk_wand,
-    )
+    from peterman_search_engine_spark.operators.query import search_bm25
+    from peterman_search_engine_spark.operators.wand import bm25_topk_wand
     from peterman_search_engine_spark.plans.session import get_spark
     from peterman_search_engine_spark.sources.regime import (
         build_regime_index,
@@ -181,7 +179,7 @@ def main() -> None:
             key=lambda t: (-t[0], t[1]),
         )[: args.k]
 
-    ex = canon(bm25_topk_exhaustive(index, q, k_fetch).collect())
+    ex = canon(search_bm25(index, q, k_fetch).collect())
     pr = canon(
         bm25_topk_wand(
             index, q, k_fetch, force_prune=force_prune
@@ -191,12 +189,12 @@ def main() -> None:
 
     # one untimed warmup pair at the measured k (JIT + page cache),
     # then interleaved timed reps (host-interference protocol)
-    bm25_topk_exhaustive(index, q, args.k).collect()
+    search_bm25(index, q, args.k).collect()
     bm25_topk_wand(index, q, args.k, force_prune=force_prune).collect()
     e_secs, p_secs = [], []
     for _ in range(args.reps):
         t = time.perf_counter()
-        bm25_topk_exhaustive(index, q, args.k).collect()
+        search_bm25(index, q, args.k).collect()
         e_secs.append(round(time.perf_counter() - t, 3))
         t = time.perf_counter()
         bm25_topk_wand(

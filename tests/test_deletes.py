@@ -17,10 +17,8 @@ from peterman_search_engine_spark.operators.maintenance import (
     delete_documents,
     persist_tombstones,
 )
-from peterman_search_engine_spark.operators.wand import (
-    bm25_topk_exhaustive,
-    bm25_topk_wand,
-)
+from peterman_search_engine_spark.operators.query import search_bm25
+from peterman_search_engine_spark.operators.wand import bm25_topk_wand
 
 
 @pytest.fixture(scope="module")
@@ -105,7 +103,7 @@ def test_delete_is_idempotent_and_incremental(full_index, deleted_ids):
 def test_wand_routes_exhaustive_under_tombstones(tomb_index):
     res, stats = bm25_topk_wand(tomb_index, TERMS, 5, return_stats=True)
     assert stats.get("reason") == "tombstones"
-    base = bm25_topk_exhaustive(tomb_index, TERMS, 5)
+    base = search_bm25(tomb_index, TERMS, 5)
     assert [tuple(r) for r in res.collect()] == [tuple(r) for r in base.collect()]
 
 
@@ -160,7 +158,7 @@ def test_compacted_scores_and_phrase_match_fresh(compacted, fresh_reduced):
 
 def test_wand_exact_after_compaction(compacted):
     res = bm25_topk_wand(compacted, TERMS, 5, force_prune=True)
-    base = bm25_topk_exhaustive(compacted, TERMS, 5)
+    base = search_bm25(compacted, TERMS, 5)
     assert [tuple(r) for r in res.collect()] == [tuple(r) for r in base.collect()]
 
 

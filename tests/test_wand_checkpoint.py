@@ -7,10 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from peterman_search_engine_spark.operators.indexer import build_index
-from peterman_search_engine_spark.operators.wand import (
-    bm25_topk_exhaustive,
-    bm25_topk_wand,
-)
+from peterman_search_engine_spark.operators.query import search_bm25
+from peterman_search_engine_spark.operators.wand import bm25_topk_wand
 from peterman_search_engine_spark.plans.checkpoint import (
     build_index_checkpointed,
     load_index,
@@ -54,7 +52,7 @@ def test_wand_rank_identical(small_index, terms):
     k = 10
     base = [
         (r["doc_id"], round(r["score"], 9))
-        for r in bm25_topk_exhaustive(small_index, terms, k).collect()
+        for r in search_bm25(small_index, terms, k).collect()
     ]
     got_df, stats = bm25_topk_wand(
         small_index, terms, k, force_prune=True, return_stats=True
@@ -81,7 +79,7 @@ def test_wand_cost_gate(small_index):
     )
     assert stats.get("gated_exhaustive") is True
     assert stats["est_entries"] > 0
-    base = bm25_topk_exhaustive(small_index, ["spark", "merge"], 5)
+    base = search_bm25(small_index, ["spark", "merge"], 5)
     assert [tuple(r) for r in res.collect()] == [tuple(r) for r in base.collect()]
     # forcing a tiny threshold takes the pruned path
     _, stats2 = bm25_topk_wand(
@@ -133,7 +131,7 @@ def test_wand_exact_with_duplicate_posting_rows(spark, small_corpus):
     for terms in (["spark", "merge"], ["index", "query", "vector"]):
         want = [
             (r["doc_id"], round(r["score"], 9))
-            for r in bm25_topk_exhaustive(idx, terms, 10).collect()
+            for r in search_bm25(idx, terms, 10).collect()
         ]
         got = [
             (r["doc_id"], round(r["score"], 9))
@@ -246,10 +244,8 @@ def test_wand_prunes_on_skewed_corpus(spark):
     from pyspark.sql import functions as F
 
     from peterman_search_engine_spark.operators.indexer import build_index
-    from peterman_search_engine_spark.operators.wand import (
-        bm25_topk_exhaustive,
-        bm25_topk_wand,
-    )
+    from peterman_search_engine_spark.operators.query import search_bm25
+    from peterman_search_engine_spark.operators.wand import bm25_topk_wand
 
     n = 2000
     docs = spark.range(n).select(
@@ -273,7 +269,7 @@ def test_wand_prunes_on_skewed_corpus(spark):
         idx, ["rare", "common"], 10, seed_segments=1, force_prune=True,
         return_stats=True,
     )
-    want = bm25_topk_exhaustive(idx, ["rare", "common"], 10)
+    want = search_bm25(idx, ["rare", "common"], 10)
     assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
     assert stats["prune_ratio"] > 0.3, stats
 
@@ -288,10 +284,8 @@ def test_wand_essential_df_routing(spark):
     from pyspark.sql import functions as F
 
     from peterman_search_engine_spark.operators.indexer import build_index
-    from peterman_search_engine_spark.operators.wand import (
-        bm25_topk_exhaustive,
-        bm25_topk_wand,
-    )
+    from peterman_search_engine_spark.operators.query import search_bm25
+    from peterman_search_engine_spark.operators.wand import bm25_topk_wand
 
     n = 2000
     docs = spark.range(n).select(
@@ -314,7 +308,7 @@ def test_wand_essential_df_routing(spark):
     assert stats.get("gated_exhaustive") is True
     assert stats["reason"] == "essential_df_fraction"
     assert stats["essential_df_fraction"] >= 0.5
-    base = bm25_topk_exhaustive(idx, ["alpha", "beta"], 5)
+    base = search_bm25(idx, ["alpha", "beta"], 5)
     assert [tuple(r) for r in res.collect()] == [tuple(r) for r in base.collect()]
 
     # force_prune bypasses the route, prunes nothing useful, but stays exact
@@ -331,5 +325,5 @@ def test_wand_essential_df_routing(spark):
     )
     assert not stats_r.get("gated_exhaustive"), stats_r
     assert stats_r["essential_df_fraction"] < 0.5
-    base_r = bm25_topk_exhaustive(idx, ["zrare", "alpha"], 5)
+    base_r = search_bm25(idx, ["zrare", "alpha"], 5)
     assert [tuple(r) for r in res_r.collect()] == [tuple(r) for r in base_r.collect()]

@@ -21,10 +21,8 @@ def canon_topk(rows, k):
         key=lambda t: (-t[0], t[1]),
     )[:k]
 
-from peterman_search_engine_spark.operators.wand import (
-    bm25_topk_exhaustive,
-    bm25_topk_wand,
-)
+from peterman_search_engine_spark.operators.query import search_bm25
+from peterman_search_engine_spark.operators.wand import bm25_topk_wand
 from peterman_search_engine_spark.sources.regime import (
     RARE_TERM,
     build_regime_index,
@@ -114,7 +112,7 @@ def test_maxscore_split_and_exactness(regime_index):
     # blocks exist, minus the seed segment's
     assert 0 < stats["blocks_decoded"] <= (RARE_SPAN // RARE_EVERY) // 128 + 8
     assert stats["prune_ratio"] > 0.9
-    ex = canon_topk(bm25_topk_exhaustive(regime_index, q, 50).collect(), 10)
+    ex = canon_topk(search_bm25(regime_index, q, 50).collect(), 10)
     pr = canon_topk(
         bm25_topk_wand(regime_index, q, 50, force_prune=True).collect(), 10
     )
@@ -127,7 +125,7 @@ def test_build_regime_index_helper(spark, tmp_path):
     idx = build_regime_index(spark, str(tmp_path), 2_000, partitions=4)
     assert idx.n_docs == 2_000
     q = regime_query()
-    ex = canon_topk(bm25_topk_exhaustive(idx, q, 25).collect(), 5)
+    ex = canon_topk(search_bm25(idx, q, 25).collect(), 5)
     pr = canon_topk(
         bm25_topk_wand(idx, q, 25, force_prune=True).collect(), 5
     )
