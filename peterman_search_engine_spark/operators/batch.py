@@ -10,17 +10,19 @@ which single queries run as the log ``{0: ...}``:
 1. postings are scanned ONCE, IN-filtered to the union of all query
    terms (pushdown intact — for a big log this converges to a full
    posting scan, which is exactly the amortization);
-2. exploded hits join doc_stats on doc_id, then fan out across
-   queries via a BROADCAST join on term against the IN-filtered
-   term_stats rows, each carrying its (qid, qtf) list from one literal
-   map — each posting row multiplies only by the queries that contain
-   its term;
+2. each posting row takes its term's (df, cf, [(qid, qtf)]) entry
+   from one literal map — the statistics come from the driver-side
+   term dictionary, so no term_stats scan or join is planned — and
+   its exploded hits join doc_stats on doc_id, then fan out across
+   queries by ``inline`` over that list — each posting row multiplies
+   only by the queries that contain its term;
 3. per-(qid, doc) partial+final hash aggregation of BM25
    contributions;
 4. per-query top-k as a window rank over (qid), shuffling only the
    SCORED rows.
 
-Building the plan runs no Spark job. Wall-clock is sublinear in
+Building the plan runs no Spark job on a persisted index (the
+dictionary lookup is a pyarrow read on the driver). Wall-clock is sublinear in
 #queries (the scan/join dominate and are shared); the driver never
 sees more than the final k×|queries| rows.
 """

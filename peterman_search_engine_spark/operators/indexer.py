@@ -67,6 +67,7 @@ from ..functions.codec import (
     delta_varint_encode_grouped,
     varint_positions_sql,
 )
+from ..plans.storage import read_term_info
 
 K1 = 1.2
 B = 0.75
@@ -178,6 +179,26 @@ def _make_encode_udf(avg_len: float, block_size: int, *, positional: bool = Fals
     return _encode
 
 
+class _BuiltOnRead:
+    """A dataclass field that may be given as a zero-argument callable
+    instead of its value: the callable runs on the first read, and its
+    result replaces it."""
+
+    def __set_name__(self, owner, name: str) -> None:
+        self._key = f"_{name}"
+
+    def __get__(self, obj, owner=None):
+        if obj is None:
+            raise AttributeError(self._key)  # no class default: the field stays required
+        value = obj.__dict__[self._key]
+        if callable(value):
+            value = obj.__dict__[self._key] = value()
+        return value
+
+    def __set__(self, obj, value) -> None:
+        obj.__dict__[self._key] = value
+
+
 @dataclass
 class InvertedIndex:
     """The built index: a set of DataFrames (or loaded Parquet tables).
@@ -194,7 +215,10 @@ class InvertedIndex:
     """
 
     postings: DataFrame
-    term_stats: DataFrame
+    # a loader passes a callable, so an index opens without building
+    # the term_stats plan; queries that only look terms up never read
+    # it (they call term_info)
+    term_stats: DataFrame = _BuiltOnRead()
     doc_stats: DataFrame
     n_docs: int
     avg_len: float
@@ -222,6 +246,16 @@ class InvertedIndex:
     # rewrites the postings — the standard large-index delete tradeoff
     # (metadata-sized delete now, one full rewrite amortized later).
     tombstones: DataFrame | None = None
+    # the parquet files whose per-term sum IS term_stats (a persisted
+    # index: the base table plus committed deltas), read on the driver
+    # by term_info; None when term_stats has no files of its own. They
+    # must describe the same rows as term_stats.
+    term_stats_files: tuple[str, ...] | None = None
+    # |C|, the tokens the postings store: Σ doc_len over doc_stats,
+    # tombstoned docs included, as df/cf count them. None means
+    # n_docs·avg_len, which holds wherever n_docs and avg_len describe
+    # doc_stats itself (a streaming index's are live-only).
+    stored_len: int | None = None
 
     def num_segments(self) -> int:
         return self.postings.select("segment").distinct().count()
@@ -231,6 +265,28 @@ class InvertedIndex:
         over term_stats.df."""
         n = f"{float(self.n_docs)!r}D"
         return f"ln(1.0D + ({n} - df + 0.5D) / (df + 0.5D))"
+
+    def term_info(self, terms) -> dict[str, tuple[int, int]]:
+        """The dictionary lookup — ``{term: (df, cf)}`` for the given
+        terms that the index holds (the reference's dictionary slot,
+        ``getDocumentFrequency``, IIM:705-715). A persisted index reads
+        its ``term_stats_files`` with pyarrow on the driver and runs no
+        Spark job; any other index runs one filtered collect."""
+        terms = sorted(set(terms))
+        if not terms:
+            return {}
+        if self.term_stats_files is not None:
+            return read_term_info(self.term_stats_files, terms)
+        rows = self.term_stats.filter(F.col("term").isin(terms)).select(
+            "term", "df", "cf"
+        ).collect()
+        return {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
+
+    def collection_len(self) -> float:
+        """|C| from the index stats, without a Spark job."""
+        if self.stored_len is not None:
+            return float(self.stored_len)
+        return float(round(self.n_docs * self.avg_len))
 
 
 def tokenize_corpus(corpus: DataFrame, *, stem: bool = True) -> DataFrame:

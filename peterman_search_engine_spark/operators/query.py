@@ -6,14 +6,20 @@ Every query is a declarative DataFrame plan over the index tables:
   predicate pushdown prunes files by the ``term`` column, the
   Spark-side analogue of the reference's per-segment dictionary skip
   (``InvertedIndexManager.java:390, 617``).
+* query terms' statistics (df, cf) come from the driver-side term
+  dictionary, ``InvertedIndex.term_info`` — the reference reads df
+  from its in-process dictionary slot (``getDocumentFrequency``,
+  ``IIM:705-715``) the same way; a persisted index answers with a
+  pyarrow read of its term_stats files and no Spark job.
 * every ranked scorer — TF-IDF, BM25 (and so RM3, more-like-this,
   grouped and hybrid retrieval), BM25F, LM-Dirichlet, batch BM25 and
-  WAND's exact rescore — runs one plan, :func:`score_terms`: weighted
-  ``term_stats`` rows, exploded postings, one broadcast join on term,
-  a per-(qid, doc) hash aggregate (Catalyst partial+final — exactly
-  the reference's per-segment accumulator maps, ``IIM:614-638``, but
-  distributed). A scorer differs only in its weights and its Spark
-  SQL sums and score expression.
+  WAND's exact rescore — runs one plan, :func:`score_terms`, built as
+  one ``spark.sql`` statement: IN-filtered postings carrying their
+  term's literal (df, cf, query weights), exploded, fanned out to
+  their queries, and a per-(qid, doc) hash aggregate (Catalyst
+  partial+final — exactly the reference's per-segment accumulator
+  maps, ``IIM:614-638``, but distributed). A scorer differs only in
+  its weights and its Spark SQL sums and score expression.
 * top-k is ``orderBy(desc(score), doc_id).limit(k)`` →
   ``TakeOrderedAndProject`` (per-partition bounded heap + driver merge;
   the distributed form of the reference's MinMaxPriorityQueue,
@@ -57,10 +63,15 @@ def _sql_double(x: float) -> str:
     return f"{float(x)!r}D"
 
 
-def _terms_in(terms) -> Column:
-    """``term IN (...)`` as one parsed predicate; it pushes down to the
+def _terms_in_sql(terms) -> str:
+    """``term IN (...)`` as Spark SQL text; it pushes down to the
     Parquet scan of a persisted index."""
-    return F.expr(f"term IN ({', '.join(_sql_str(t) for t in sorted(set(terms)))})")
+    return f"term IN ({', '.join(_sql_str(t) for t in sorted(set(terms)))})"
+
+
+def _terms_in(terms) -> Column:
+    """:func:`_terms_in_sql` as one parsed predicate."""
+    return F.expr(_terms_in_sql(terms))
 
 
 def _postings_for(index: InvertedIndex, toks: list[str]) -> DataFrame:
@@ -541,6 +552,13 @@ def bm25_tf_sql(tf: str, dl: str, avg_len: float) -> str:
     )
 
 
+def _fmt(text: str) -> str:
+    """``text`` escaped for the ``str.format`` pass ``spark.sql`` makes
+    over a statement with DataFrame arguments: a term may hold ``{`` or
+    ``}`` (the analyzer splits on neither)."""
+    return text.replace("{", "{{").replace("}", "}}")
+
+
 def score_terms(
     index: InvertedIndex,
     weights: dict[int, dict[str, float]],
@@ -559,66 +577,83 @@ def score_terms(
     ``sums`` maps names to per-posting Spark SQL expressions, summed
     per (qid, doc); ``score`` is SQL over those names (and ``doc_len``)
     giving the doc's score. A posting row sees ``term``, ``doc_id``,
-    the ``term_stats`` columns (``df``, ``cf``), ``qid``, its weight
-    ``qw``, the zipped posting ``cols`` (``tfs`` as ``tf``, others by
-    name) and, when any expression names it, ``doc_len``.
+    the term's ``df`` and ``cf``, ``qid``, its weight ``qw``, the
+    zipped posting ``cols`` (``tfs`` as ``tf``, others by name) and,
+    when any expression names it, ``doc_len``.
 
-    The plan:
+    The plan is one ``spark.sql`` statement (SQL text: the parser
+    builds it in one call, where a DataFrame chain costs a
+    driver-to-JVM call per step):
 
-    1. the weights side is ``term_stats`` IN-filtered to the query
-       terms, each row fanned out to its queries by ``inline``-ing one
-       literal ``map(term -> array(named_struct(qid, qw)))`` (SQL text:
-       the parser builds it in one call, where Column literals cost a
-       driver-to-JVM call each); terms missing from the dictionary
-       drop out;
+    1. the query terms' ``(df, cf)`` come from the driver-side
+       dictionary (``InvertedIndex.term_info``), and terms it does not
+       hold drop out; no ``term_stats`` scan enters the plan;
     2. postings (``postings`` if given: a caller's scoped scan) are
-       IN-filtered and exploded over ``arrays_zip(doc_ids, *cols)``,
-       then restricted to the ``docs`` candidates if given;
-    3. ``doc_stats`` is joined only when an expression names
-       ``doc_len``, before the fan-out, so a posting meets it once;
-    4. broadcast join on term, hash-aggregate per (qid, doc_id), with
-       ``doc_len`` as a key only when the score expression names it,
-       the score expression, then the tombstone anti-join.
+       IN-filtered to the terms, and each row takes its term's entry
+       of one literal ``map(term -> named_struct(df, cf, qs))``, where
+       ``qs`` lists the term's ``(qid, qw)``;
+    3. rows are exploded over ``arrays_zip(doc_ids, *cols)``, then
+       restricted to the ``docs`` candidates if given;
+    4. ``doc_stats`` is joined only when an expression names
+       ``doc_len``, before the fan-out to queries, so a posting meets
+       it once;
+    5. ``inline(qs)`` fans each posting out to its queries, a hash
+       aggregate sums per (qid, doc_id) (with ``doc_len`` as a key only
+       when the score expression names it), the score expression
+       runs, and tombstoned docs are anti-joined away.
     """
-    terms = sorted({t for w in weights.values() for t in w})
-    if not terms:
-        return local_frame(
-            index.postings.sparkSession, [], "qid long, doc_id long, score double"
-        )
+    spark = index.postings.sparkSession
+    info = index.term_info({t for w in weights.values() for t in w})
+    if not info:
+        return local_frame(spark, [], "qid long, doc_id long, score double")
     fan: dict[str, list[str]] = {}
     for qid, w in sorted(weights.items()):
         for t, x in sorted(w.items()):
-            fan.setdefault(t, []).append(
-                f"named_struct('qid', {int(qid)}L, 'qw', {_sql_double(x)})"
-            )
-    entries = ", ".join(f"{_sql_str(t)}, array({', '.join(v)})" for t, v in fan.items())
-    in_terms = _terms_in(terms)
-    wt = index.term_stats.filter(in_terms).select(
-        "term", "df", "cf", F.expr(f"inline(map({entries})[term])")
+            if t in info:
+                fan.setdefault(t, []).append(
+                    f"named_struct('qid', {int(qid)}L, 'qw', {_sql_double(x)})"
+                )
+    wmap = ", ".join(
+        f"{_sql_str(t)}, named_struct('df', {info[t][0]}L, 'cf', {info[t][1]}L, "
+        f"'qs', array({', '.join(v)}))"
+        for t, v in fan.items()
     )
-    p = (index.postings if postings is None else postings).filter(in_terms)
-    hits = p.select(
-        "term", F.explode(F.arrays_zip("doc_ids", *cols)).alias("_z")
-    ).select(
-        "term",
-        F.col("_z.doc_ids").alias("doc_id"),
-        *[F.col(f"_z.{c}").alias("tf" if c == "tfs" else c) for c in cols],
+    frames = {"p": index.postings if postings is None else postings}
+    zipped = ", ".join(cols)
+    fields = ", ".join(f"_z.{c} AS {'tf' if c == 'tfs' else c}" for c in cols)
+    hits = (
+        f"SELECT term, _w.df AS df, _w.cf AS cf, _w.qs AS _qs, "
+        f"_z.doc_ids AS doc_id, {fields} "
+        f"FROM (SELECT term, doc_ids, {zipped}, map({_fmt(wmap)})[term] AS _w "
+        f"FROM {{p}} WHERE {_fmt(_terms_in_sql(fan))}) _p "
+        f"LATERAL VIEW explode(arrays_zip(doc_ids, {zipped})) _e AS _z"
     )
     if docs is not None:
         # restrict BEFORE the agg shuffle: only candidate docs move
-        hits = hits.join(docs, "doc_id")
+        frames["c"] = docs
+        hits = f"SELECT h.* FROM ({hits}) h JOIN {{c}} c ON h.doc_id = c.doc_id"
     doc_len = re.compile(r"\bdoc_len\b")
     if any(doc_len.search(e) for e in [score, *sums.values()]):
-        hits = hits.join(index.doc_stats.select("doc_id", "doc_len"), "doc_id")
+        frames["d"] = index.doc_stats
+        hits = (
+            f"SELECT h.*, d.doc_len FROM ({hits}) h "
+            f"JOIN {{d}} d ON h.doc_id = d.doc_id"
+        )
     # only a score over doc_len carries it through the agg shuffle
-    keys = ["qid", "doc_id"] + (["doc_len"] if doc_len.search(score) else [])
+    keys = "qid, doc_id" + (", doc_len" if doc_len.search(score) else "")
+    aggs = ", ".join(f"sum({_fmt(e)}) AS {n}" for n, e in sums.items())
     scored = (
-        hits.join(F.broadcast(wt), "term")
-        .groupBy(*keys)
-        .agg(*[F.expr(f"sum({e})").alias(n) for n, e in sums.items()])
-        .select("qid", "doc_id", F.expr(score).alias("score"))
+        f"SELECT qid, doc_id, {_fmt(score)} AS score FROM ("
+        f"SELECT {keys}, {aggs} FROM ({hits}) h "
+        f"LATERAL VIEW inline(_qs) _q AS qid, qw GROUP BY {keys}) s"
     )
-    return _live(index, scored)
+    if index.tombstones is not None:
+        frames["t"] = index.tombstones
+        scored = (
+            f"SELECT s.* FROM ({scored}) s "
+            f"LEFT ANTI JOIN {{t}} t ON s.doc_id = t.doc_id"
+        )
+    return spark.sql(scored, **frames)
 
 
 def tfidf_scores(index: InvertedIndex, terms: list[str]) -> DataFrame:

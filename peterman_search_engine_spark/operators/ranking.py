@@ -40,7 +40,6 @@ from .indexer import InvertedIndex
 from .query import (
     _query_weights,
     _sql_double,
-    _terms_in,
     bm25_tf_sql,
     score_terms,
     top_k_df,
@@ -285,23 +284,23 @@ def lm_dirichlet_scores(
     shift every doc's score by the same -inf and carry no signal.
 
     The plan is the BM25 plan, ``query.score_terms``, with the matched
-    sum ``qtf·ln(1 + tf/(mu·cf/|C|))`` over the joined term_stats cf and
-    the closed form as its score expression. Driver state: the O(|q|)
-    (term, cf) rows for K and one scalar (|C|). Returns (doc_id, score).
+    sum ``qtf·ln(1 + tf/(mu·cf/|C|))`` over each term's dictionary cf
+    and the closed form as its score expression. Driver state: the
+    O(|q|) cf values from the dictionary lookup
+    (``InvertedIndex.term_info``) for K, and |C| from the index stats
+    (``InvertedIndex.collection_len``: the stored tokens, as cf counts
+    them) — building the plan runs no Spark job. Returns (doc_id, score).
     """
     qtf = _query_weights(index, terms)
     spark = index.postings.sparkSession
     if not qtf:
         return local_frame(spark, [], "doc_id long, score double")
-    total_c = index.doc_stats.agg(F.sum("doc_len")).collect()[0][0]  # |C|, one scalar
-    stats = {
-        r["term"]: r["cf"]
-        for r in index.term_stats.filter(_terms_in(qtf)).collect()  # O(|q|) planner state
-    }
-    live = {t: n for t, n in qtf.items() if stats.get(t, 0) > 0}
+    total_c = index.collection_len()
+    cf = {t: c for t, (_, c) in index.term_info(qtf).items()}
+    live = {t: n for t, n in qtf.items() if cf.get(t, 0) > 0}
     if not live:
         return local_frame(spark, [], "doc_id long, score double")
-    k_const = sum(n * math.log(mu * stats[t] / total_c) for t, n in live.items())
+    k_const = sum(n * math.log(mu * cf[t] / total_c) for t, n in live.items())
     q_total = sum(live.values())
     mu_sql, c_sql = _sql_double(mu), _sql_double(total_c)
     return score_terms(

@@ -11,9 +11,10 @@ constant ``qtf*idf`` gives a valid block score bound).
 Exact top-k as a short sequence of metadata-bounded jobs whose
 results become driver-side planning state (θ, seed segments, the
 MaxScore term partition) — the way production WAND engines hold these
-in the query planner. Driver collects are O(|query terms|) dictionary
-rows, O(|segments|·|query terms|) per-segment block maxima, and O(k)
-seed scores: scale-free relative to posting volume. (An earlier
+in the query planner. Driver state is O(|query terms|) dictionary
+entries (read on the driver, no job), and the collects are
+O(|segments|·|query terms|) per-segment block maxima and O(k) seed
+scores: scale-free relative to posting volume. (An earlier
 all-lazy single-plan formulation re-evaluated the seed-scoring and
 block-metadata subtrees once per broadcast branch and lost 2× wall
 clock to plan overhead despite a 0.9998 prune ratio in the winning
@@ -53,10 +54,11 @@ Cost model (why the gate exists): the pruned plan pays a fixed
 overhead — seed-scoring subjob, block-metadata overlap join, blob
 decode — that only amortizes when the exhaustive plan would shuffle
 a large posting volume. ``prune_min_entries`` gates on Σ df over the
-query terms (one tiny term_stats lookup, the same statistic the
-reference reads from its dictionary slots): below the threshold the
-exhaustive plan wins and is returned directly; above it phase B
-touches only (segment, term, block) metadata rows
+query terms (one driver-side dictionary lookup,
+``InvertedIndex.term_info``, which runs no Spark job — the same
+statistic the reference reads from its dictionary slots): below the
+threshold the exhaustive plan wins and is returned directly; above it
+phase B touches only (segment, term, block) metadata rows
 (|postings|/block_size) and phase C's shuffle carries only candidate
 docs. Prune effectiveness depends on score skew: near-uniform
 per-block bounds prune nothing (correctly); skewed tf / doc-length
@@ -204,9 +206,9 @@ def bm25_topk_wand(
 
     # One dictionary lookup serves both the cost gate and the per-term
     # weights (the reference reads the same df numbers from its
-    # dictionary slots, IIM:705-715): #query-terms rows.
-    trows = index.term_stats.filter(_terms_in(qtf)).select("term", "df").collect()
-    est = int(sum(r["df"] for r in trows))
+    # dictionary slots, IIM:705-715): a driver-side read, no Spark job.
+    df_by_term = {t: df for t, (df, _) in index.term_info(qtf).items()}
+    est = sum(df_by_term.values())
     if not force_prune and est < prune_min_entries:
         res = search_bm25(index, terms, k)
         if return_stats:
@@ -216,7 +218,7 @@ def bm25_topk_wand(
     # The pruned path runs as a handful of METADATA-BOUNDED jobs whose
     # results become driver-side planning state — exactly how
     # production WAND engines hold θ and the MaxScore term partition
-    # in the query planner. Driver collects are O(|qterms|) weights,
+    # in the query planner. Driver state is O(|qterms|) weights,
     # O(|segments|·|qterms|) block maxima, and O(k) seed scores —
     # scale-free relative to posting volume. (An earlier all-lazy
     # formulation re-evaluated the seed-scoring and block-metadata
@@ -228,9 +230,8 @@ def bm25_topk_wand(
     # query terms absent from the corpus drop out here — the
     # reference's dictionary skip (IIM:617)
     w = {
-        r["term"]: qtf[r["term"]]
-        * math.log(1.0 + (n - r["df"] + 0.5) / (r["df"] + 0.5))
-        for r in trows
+        t: qtf[t] * math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+        for t, df in df_by_term.items()
     }
     if not w:
         return _empty({"est_entries": 0})
@@ -321,7 +322,6 @@ def bm25_topk_wand(
     # pure overhead. Route to the exhaustive plan; the planner spend
     # so far is O(metadata) + one seed segment (~1/#segments of the
     # corpus). force_prune bypasses (diagnostics / A-B evidence).
-    df_by_term = {r["term"]: int(r["df"]) for r in trows}
     ess_df = sum(df_by_term[t] for t in ess)
     if not force_prune and est and ess_df >= ESSENTIAL_DF_ROUTE_FRACTION * est:
         res = search_bm25(index, terms, k)

@@ -44,7 +44,7 @@ from ..operators.indexer import (
     postings_from_corpus,
 )
 from .session import local_frame
-from .storage import TableStore
+from .storage import TableStore, table_files
 
 
 def _manifest_path(index_dir: str, group: int) -> str:
@@ -204,10 +204,12 @@ def build_index_checkpointed(
     # columns). Rewritten on any new group.
     if built > 0 or not store.exists("term_stats"):
         allp = store.read("postings")
+        # term-sorted files let the dictionary lookup skip row groups
+        # by their min/max term; the sort adds no job
         store.write(
-            allp.groupBy("term").agg(
-                F.sum("df").alias("df"), F.sum("cf").alias("cf")
-            ),
+            allp.groupBy("term")
+            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+            .sortWithinPartitions("term"),
             "term_stats",
         )
         # narrow per-block metadata for WAND's prune phase: the prune
@@ -236,7 +238,9 @@ def load_index(
 ) -> InvertedIndex:
     """Open a persisted index through the storage seam (Iceberg table
     scans or plain parquet scans — either way query-side term filters
-    push down to the scan)."""
+    push down to the scan). ``term_stats`` is read on first use; in
+    parquet mode the term dictionary lookup (``InvertedIndex.term_info``)
+    reads its files on the driver instead."""
     with open(os.path.join(index_dir, "stats.json")) as f:
         stats = json.load(f)
     if store is None:
@@ -256,7 +260,7 @@ def load_index(
 
     return InvertedIndex(
         postings=postings,
-        term_stats=store.read("term_stats"),
+        term_stats=lambda: store.read("term_stats"),
         doc_stats=store.read("doc_stats"),
         n_docs=stats["n_docs"],
         avg_len=stats["avg_len"],
@@ -267,6 +271,11 @@ def load_index(
         positions_decoded=positions_decoded,
         tombstones=(
             store.read("tombstones") if store.exists("tombstones") else None
+        ),
+        term_stats_files=(
+            tuple(table_files(os.path.join(index_dir, "term_stats")))
+            if store.mode == "parquet"
+            else None
         ),
     )
 

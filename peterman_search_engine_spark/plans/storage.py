@@ -27,7 +27,10 @@ jobs never branch on the backend. The active mode is reported in
 Every package-written parquet table is read through :func:`read_table`,
 which takes the schema from the Spark row schema stored in one data
 file's footer (read on the driver) instead of letting Spark infer it
-with a one-task job — opening an index runs no Spark job.
+with a one-task job — opening an index runs no Spark job. The term
+dictionary lookup, :func:`read_term_info`, reads the same files
+(:func:`table_files`, listed by the same rule) with pyarrow on the
+driver, so a ranked query learns its terms' df and cf without a job.
 
 To enable iceberg mode on a real cluster::
 
@@ -42,9 +45,13 @@ the session.
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
+from collections.abc import Iterator
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -56,7 +63,9 @@ CATALOG = "pse"
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _first_data_file(path: str) -> str | None:
+def _data_files(path: str) -> Iterator[str]:
+    """The data files under ``path`` in sorted order, listed as Spark
+    lists a parquet table."""
     for name in sorted(os.listdir(path)):
         # Spark's listing filter: `_x`/`.x` entries are not data (except
         # `_col=v` partition directories), nor are in-flight copies
@@ -67,12 +76,16 @@ def _first_data_file(path: str) -> str | None:
         ):
             continue
         full = os.path.join(path, name)
-        if not os.path.isdir(full):
-            return full
-        found = _first_data_file(full)
-        if found is not None:
-            return found
-    return None
+        if os.path.isdir(full):
+            yield from _data_files(full)
+        else:
+            yield full
+
+
+def table_files(path: str) -> list[str]:
+    """Every data file of the parquet table at ``path`` (empty when the
+    directory is missing)."""
+    return list(_data_files(path)) if os.path.isdir(path) else []
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
@@ -83,7 +96,7 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     skips them); partition columns (``group=``, ``batch=``, ...) are
     still discovered from the directory names under ``path``, so the
     columns and their order equal Spark's own inference."""
-    first = _first_data_file(path)
+    first = next(_data_files(path), None)
     if first is None:
         raise FileNotFoundError(f"no parquet data file under {path}")
     meta = pq.read_schema(first).metadata or {}
@@ -91,6 +104,47 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
         raise ValueError(f"{first} carries no Spark row schema in its footer")
     schema = StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
     return spark.read.schema(schema).option("basePath", path).parquet(path)
+
+
+def term_row_groups(pf: pq.ParquetFile, terms: list[str]) -> list[int]:
+    """The row groups of a ``term``-column parquet file whose min/max
+    term statistics admit one of the sorted ``terms`` (all of them when
+    a row group has no statistics). On a file written sorted by term
+    that is about one row group per term."""
+    col = pf.schema_arrow.get_field_index("term")
+    keep = []
+    for i in range(pf.metadata.num_row_groups):
+        st = pf.metadata.row_group(i).column(col).statistics
+        if st is not None and st.has_min_max:
+            j = bisect.bisect_left(terms, st.min)
+            if j == len(terms) or terms[j] > st.max:
+                continue
+        keep.append(i)
+    return keep
+
+
+def read_term_info(files, terms) -> dict[str, tuple[int, int]]:
+    """``{term: (df, cf)}`` for the ``terms`` found in the
+    ``(term, df, cf)`` parquet ``files``, summed per term over the files
+    — pyarrow reads on the driver, no Spark job. Only the row groups
+    whose min/max statistics admit a query term are read
+    (:func:`term_row_groups`)."""
+    want = sorted(set(terms))
+    out: dict[str, tuple[int, int]] = {}
+    if not want:
+        return out
+    value_set = pa.array(want, pa.string())
+    for path in files:
+        with pq.ParquetFile(path) as pf:
+            groups = term_row_groups(pf, want)
+            if not groups:
+                continue
+            table = pf.read_row_groups(groups, columns=["term", "df", "cf"])
+        table = table.filter(pc.is_in(table.column("term"), value_set=value_set))
+        for t, df, cf in zip(*(table.column(c).to_pylist() for c in ("term", "df", "cf"))):
+            d0, c0 = out.get(t, (0, 0))
+            out[t] = (d0 + df, c0 + cf)
+    return out
 
 
 def iceberg_available(spark: SparkSession) -> bool:

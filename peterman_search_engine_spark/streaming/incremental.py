@@ -30,9 +30,12 @@ Semantics:
   disagree.
 * per-batch work is O(batch), never O(index): global term_stats are
   NOT rebuilt per batch — each batch writes its own (term, df, cf)
-  delta partition and ``load_streaming_index`` folds the deltas (a
-  term-level aggregation, metadata-sized) at load time;
-  ``reencode_blocks`` compaction materializes them once.
+  delta partition. A ranked query sums its terms' rows across the
+  committed deltas on the driver (``InvertedIndex.term_info``); the
+  Spark fold of the deltas (a term-level aggregation, metadata-sized)
+  is built only for the dictionary scans that read
+  ``index.term_stats``; ``reencode_blocks`` compaction materializes
+  them once.
 * BM25/TF-IDF/boolean/phrase queries over the loaded index are exact
   and identical to a batch rebuild of the same corpus. The ONE thing
   that drifts is the stored block upper bounds (encoded with the
@@ -68,7 +71,7 @@ from pyspark.sql import functions as F
 
 from ..functions.analysis import tokens_expr
 from ..operators.indexer import DEFAULT_BLOCK_SIZE, postings_from_corpus
-from ..plans.storage import read_table
+from ..plans.storage import read_table, table_files
 
 
 def _config_path(index_dir: str) -> str:
@@ -142,7 +145,10 @@ def fold_stats(index_dir: str) -> dict:
     The same fold names what a reader may see: ``batches`` (every
     committed batch id) and ``tombstoned`` (committed batches after the
     snapshot that superseded turns — exactly the live tombstone
-    partitions). Partitions of any other batch are uncommitted."""
+    partitions). Partitions of any other batch are uncommitted.
+    ``stored_len`` is what doc_stats and the postings still hold: the
+    live ``total_len`` plus the superseded turns' lengths that no
+    compaction has removed yet."""
     comp = _read_compaction(index_dir)
     if comp is not None:
         n_docs, total_len = comp["n_docs"], comp["total_len"]
@@ -151,12 +157,14 @@ def fold_stats(index_dir: str) -> dict:
         n_docs = total_len = 0
         max_doc_id, through = -1, -1
     batches, tombstoned = [], []
+    dead_len = 0
     for m in read_manifests(index_dir):
         batches.append(m["batch"])
         if m["batch"] <= through:
             continue
         n_docs += m["n_docs"] - m.get("n_superseded", 0)
         total_len += m["total_len"] - m.get("superseded_len", 0)
+        dead_len += m.get("superseded_len", 0)
         max_doc_id = max(max_doc_id, m["doc_id_hi"] - 1)
         if m.get("n_superseded", 0):
             tombstoned.append(m["batch"])
@@ -164,6 +172,7 @@ def fold_stats(index_dir: str) -> dict:
         "n_docs": n_docs,
         "total_len": total_len,
         "avg_len": total_len / n_docs if n_docs else 0.0,
+        "stored_len": total_len + dead_len,
         "max_doc_id": max_doc_id,
         "batches": sorted(batches),
         "tombstoned": sorted(tombstoned),
@@ -387,7 +396,8 @@ def start_incremental_build(
 def load_streaming_index(spark: SparkSession, index_dir: str):
     """Open a streaming-built index with the batch query surface.
     Corpus stats fold from committed manifests; term_stats folds the
-    per-batch deltas unless a compaction materialized the table.
+    per-batch deltas unless a compaction materialized the table, and
+    that fold is built on first read of ``index.term_stats``.
 
     Runs no Spark job: every table is read with its footer schema, and
     the manifest fold decides which partitions are visible (committed
@@ -420,28 +430,36 @@ def load_streaming_index(spark: SparkSession, index_dir: str):
     # term_stats: the materialized table (written by reencode_blocks,
     # which deletes the deltas it folded) plus any per-batch deltas
     # ingested SINCE that materialization — both present means batches
-    # arrived after a compaction, and the sum of the two is exact
+    # arrived after a compaction, and the sum of the two is exact. The
+    # Spark fold is built only when something reads index.term_stats;
+    # ranked queries look their terms up in the same files instead.
     ts_dir = os.path.join(index_dir, "term_stats")
     td_dir = os.path.join(index_dir, "term_stats_delta")
     deltas = [
         b for b in committed if os.path.isdir(os.path.join(td_dir, f"batch={b}"))
     ]
-    parts = []
-    if os.path.isdir(ts_dir):
-        parts.append(read_table(spark, ts_dir).select("term", "df", "cf"))
-    if deltas:
-        parts.append(
-            read_table(spark, td_dir)
-            .filter(F.col("batch").isin(deltas))
-            .select("term", "df", "cf")
-        )
-    term_stats = parts[0]
-    if len(parts) > 1:
-        term_stats = parts[0].unionByName(parts[1])
-    if len(parts) > 1 or not os.path.isdir(ts_dir):
-        term_stats = term_stats.groupBy("term").agg(
-            F.sum("df").alias("df"), F.sum("cf").alias("cf")
-        )
+    ts_files = table_files(ts_dir) + [
+        f for b in deltas for f in table_files(os.path.join(td_dir, f"batch={b}"))
+    ]
+
+    def fold_term_stats() -> DataFrame:
+        parts = []
+        if os.path.isdir(ts_dir):
+            parts.append(read_table(spark, ts_dir).select("term", "df", "cf"))
+        if deltas:
+            parts.append(
+                read_table(spark, td_dir)
+                .filter(F.col("batch").isin(deltas))
+                .select("term", "df", "cf")
+            )
+        term_stats = parts[0]
+        if len(parts) > 1:
+            term_stats = parts[0].unionByName(parts[1])
+        if len(parts) > 1 or not os.path.isdir(ts_dir):
+            term_stats = term_stats.groupBy("term").agg(
+                F.sum("df").alias("df"), F.sum("cf").alias("cf")
+            )
+        return term_stats
 
     # batch=-1 is compaction's live-only rewrite
     ds = (
@@ -470,7 +488,7 @@ def load_streaming_index(spark: SparkSession, index_dir: str):
     bm_dir = os.path.join(index_dir, "block_meta")
     return InvertedIndex(
         postings=postings,
-        term_stats=term_stats,
+        term_stats=fold_term_stats,
         doc_stats=ds,
         n_docs=stats["n_docs"],
         avg_len=stats["avg_len"],
@@ -480,6 +498,8 @@ def load_streaming_index(spark: SparkSession, index_dir: str):
         block_meta=read_table(spark, bm_dir) if os.path.isdir(bm_dir) else None,
         positions_decoded=positions_decoded,
         tombstones=tombstones,
+        term_stats_files=tuple(ts_files),
+        stored_len=stats["stored_len"],
     )
 
 
@@ -539,7 +559,8 @@ def reencode_blocks(
     if os.path.isdir(pdir + ".new"):
         shutil.rmtree(pdir + ".new")
     out.write.parquet(os.path.join(pdir + ".new", "group=compacted"))
-    merged.term_stats.write.mode("overwrite").parquet(
+    # term-sorted, as the checkpoint build writes it
+    merged.term_stats.sortWithinPartitions("term").write.mode("overwrite").parquet(
         os.path.join(index_dir, "term_stats")
     )
     ds_root = os.path.join(index_dir, "doc_stats")

@@ -6,20 +6,22 @@ Checks (each printed with the relevant plan excerpt):
 1. term-filter PUSHDOWN to the parquet scan of a persisted index
    (``PushedFilters: [In(term, ...)]``) — the distributed analogue of
    the reference's per-segment dictionary skip;
-2. BROADCAST of the (tiny) query-term table in the BM25 scoring join;
+2. no ``term_stats`` scan in a ranked plan: the query terms' df and cf
+   come from the driver-side dictionary (``InvertedIndex.term_info``)
+   as literals (markers prefixed ``!`` must be absent);
 3. top-k as ``TakeOrderedAndProject`` (per-partition bounded heap +
    driver merge — the reference's MinMaxPriorityQueue, distributed);
 4. the aligned posting build contains NO Exchange (zero-shuffle);
 5. WholeStageCodegen covers the JVM doc-length pass;
 6. phrase search decodes positions in the JVM: its plan has no
-   ``ArrowEvalPython``/``BatchEvalPython`` node (markers prefixed
-   ``!`` must be absent);
+   ``ArrowEvalPython``/``BatchEvalPython`` node;
 7. the shuffled posting build runs the Arrow kernel as a
    ``FlatMapGroupsInArrow``, with no pandas group map and no
    per-row Python UDF;
-8. TF-IDF, batch BM25 and LM-Dirichlet run the BM25 scoring plan
-   (``query.score_terms``): pushdown, one broadcast join on term, no
-   Python step.
+8. TF-IDF, batch BM25, BM25F and LM-Dirichlet run the BM25 scoring
+   plan (``query.score_terms``): pushdown, no ``term_stats`` scan, no
+   Python step; TF-IDF, which needs no doc length, has no join at
+   all.
 
 Usage: ``python scripts/explain.py [out.md]`` — writes markdown to
 stdout or the given file. Run from the repo root.
@@ -76,19 +78,22 @@ def main() -> None:
     bm25 = Q.bm25_scores(idx, ["spark", "merge"])
     plan = formatted(bm25.orderBy(F.desc("score"), F.asc("doc_id")).limit(10))
     sections.append((
-        "BM25 top-k over the persisted index",
+        "BM25 top-k over the persisted index — df and cf are literals "
+        "from the driver-side term dictionary, so the only join is the "
+        "doc_stats broadcast",
         plan,
-        ["PushedFilters", "BroadcastHashJoin", "TakeOrderedAndProject"],
+        ["PushedFilters", "BroadcastHashJoin", "TakeOrderedAndProject",
+         "!term_stats"],
     ))
 
     tfidf = Q.search_tfidf(idx, ["spark", "merge"], 10)
     sections.append((
         "TF-IDF top-k — the same scoring plan as BM25 "
-        "(query.score_terms) with two sums (dot, len) and no "
-        "doc_stats join",
+        "(query.score_terms) with two sums (dot, len); no doc_stats "
+        "join and no term_stats scan, so no join at all",
         formatted(tfidf),
-        ["PushedFilters", "BroadcastHashJoin", "!ArrowEvalPython",
-         "!BatchEvalPython"],
+        ["PushedFilters", "!BroadcastHashJoin", "!term_stats",
+         "!ArrowEvalPython", "!BatchEvalPython"],
     ))
 
     from peterman_search_engine_spark.operators.batch import batch_bm25_topk
@@ -97,13 +102,14 @@ def main() -> None:
         idx, {0: ["spark", "merge"], 1: ["vector"], 2: ["merge", "stream"]}, 10
     )
     sections.append((
-        "Batch BM25 — a 3-query log in the single-query plan: the "
-        "term_stats rows fan out to their queries through one "
-        "inline'd literal map, then one broadcast join on term, a "
-        "(qid, doc) hash aggregate and a per-qid window rank",
+        "Batch BM25 — a 3-query log in the single-query plan: each "
+        "posting row takes its term's (df, cf, queries) from one "
+        "literal map and fans out to its queries by inline after the "
+        "doc_stats join, then a (qid, doc) hash aggregate and a "
+        "per-qid window rank",
         formatted(batch),
-        ["PushedFilters", "BroadcastHashJoin", "!ArrowEvalPython",
-         "!BatchEvalPython"],
+        ["PushedFilters", "BroadcastHashJoin", "!term_stats",
+         "!ArrowEvalPython", "!BatchEvalPython"],
     ))
 
     aligned = postings_from_aligned_corpus(
@@ -153,7 +159,8 @@ def main() -> None:
         "filter over the stored position lists (no re-tokenization, "
         "no Python); same pushdown/broadcast/top-k markers",
         formatted(bm25f),
-        ["PushedFilters", "BroadcastHashJoin", "TakeOrderedAndProject"],
+        ["PushedFilters", "BroadcastHashJoin", "TakeOrderedAndProject",
+         "!term_stats"],
     ))
 
     grouped = grouped_topk(idx, ["vector", "stream"], docs, "source", 5)
@@ -180,12 +187,12 @@ def main() -> None:
     lm = search_lm_dirichlet(idx, ["spark", "merge"], 10)
     sections.append((
         "LM-Dirichlet top-k — the BM25 plan (query.score_terms) with "
-        "the matched-term log sum over the joined cf and the "
+        "the matched-term log sum over the dictionary's cf and the "
         "unmatched-term mass as a closed-form score expression, not "
-        "extra rows; no Python step",
+        "extra rows; |C| comes from the index stats; no Python step",
         formatted(lm),
         ["PushedFilters", "BroadcastHashJoin", "TakeOrderedAndProject",
-         "!ArrowEvalPython", "!BatchEvalPython"],
+         "!term_stats", "!ArrowEvalPython", "!BatchEvalPython"],
     ))
 
     rx = Q.search_regex(idx, "(merg|wind)[a-z]*", 10)

@@ -1,13 +1,14 @@
 """The one scoring plan, ``query.score_terms``.
 
 Every ranked query carries its weights into the plan as one literal
-SQL map keyed by term, and analyzed terms can keep ``'`` and ``\\``
-(the analyzer splits on neither). These tests rank such terms with
-every scorer on a persisted index and compare them with the brute-force
+SQL map keyed by term, and analyzed terms can keep ``'``, ``\\``, ``{``
+and ``}`` (the analyzer splits on none of them; ``spark.sql`` formats
+its text with ``str.format``). These tests rank such terms with every
+scorer on a persisted index and compare them with the brute-force
 oracle, or with the per-query result for the batch ranker. They also
 pin the plan's Spark job counts: building a batch plan runs no job, and
-``search_bm25`` / ``search_tfidf`` run no more jobs than before the
-scorers shared one plan."""
+the ranked queries run no more jobs than with the term dictionary read
+on the driver."""
 
 import math
 import uuid
@@ -23,10 +24,15 @@ from peterman_search_engine_spark.operators.ranking import (
     bm25f_scores,
     lm_dirichlet_scores,
 )
+from peterman_search_engine_spark.operators.wand import bm25_topk_wand
 from peterman_search_engine_spark.oracle import OracleIndex
 from peterman_search_engine_spark.plans.checkpoint import (
     build_index_checkpointed,
     load_index,
+)
+from peterman_search_engine_spark.streaming.incremental import (
+    ingest_batch,
+    load_streaming_index,
 )
 
 K1, B, MU = 1.2, 0.75, 1000.0
@@ -40,12 +46,14 @@ QUOTED = [
     (5, "back\\slash back\\slash escapes it\\'s quote"),
     (6, "one two three four five six seven eight nine ten eleven twelve "
         "thirteen fourteen fifteen sixteen seventeen o'neil parser"),
+    (7, "the {x} parser and {p} notes by o'neil {x}"),
 ]
 QUERIES = [
     ["o'neil"],
     ["back\\slash"],
     ["o'neil", "back\\slash", "o'neil"],
     ["it\\'s", "parser"],
+    ["{x}", "parser", "{p}"],
 ]
 
 
@@ -69,7 +77,7 @@ def _rows(df):
 
 def test_quoted_terms_are_indexed(quoted):
     _, oracle = quoted
-    assert {"o'neil", "back\\slash", "it\\'s"} <= set(oracle.postings)
+    assert {"o'neil", "back\\slash", "it\\'s", "{x}", "{p}"} <= set(oracle.postings)
 
 
 @pytest.mark.parametrize("q", QUERIES, ids="+".join)
@@ -187,3 +195,61 @@ def test_ranked_query_jobs_no_higher(spark, persisted, name, run, most, q):
     rows, n = _jobs_of(spark, lambda: run(persisted, q))
     assert rows
     assert n <= most, (name, n)
+
+
+# With the term dictionary read on the driver, no plan scans or
+# broadcasts term_stats: search_bm25 runs 3 jobs and search_tfidf 2.
+@pytest.mark.parametrize(
+    "run,most",
+    [
+        pytest.param(lambda idx, q: Q.search_bm25(idx, q, 5).collect(), 3, id="search_bm25"),
+        pytest.param(lambda idx, q: Q.search_tfidf(idx, q, 5).collect(), 2, id="search_tfidf"),
+    ],
+)
+@pytest.mark.parametrize("q", TINY_QUERIES, ids="+".join)
+def test_ranked_query_jobs_with_term_dictionary(spark, persisted, run, most, q):
+    rows, n = _jobs_of(spark, lambda: run(persisted, q))
+    assert rows
+    assert n <= most, n
+
+
+@pytest.mark.parametrize("q", TINY_QUERIES, ids="+".join)
+def test_wand_default_route_jobs_no_higher_than_bm25(spark, persisted, q):
+    """Below the prune gate WAND's dictionary lookup adds no job to the
+    exhaustive plan it routes to."""
+    def run():
+        res, stats = bm25_topk_wand(persisted, q, 5, return_stats=True)
+        return res.collect(), stats
+
+    (rows, stats), n = _jobs_of(spark, run)
+    assert stats["gated_exhaustive"] and "reason" not in stats
+    want, n_bm25 = _jobs_of(spark, lambda: Q.search_bm25(persisted, q, 5).collect())
+    assert rows == want
+    assert n <= n_bm25 <= 3, (n, n_bm25)
+
+
+STREAM_B0 = [
+    ("ca", 0, "apple engine rotten apple"),
+    ("cb", 0, "cat toy engine"),
+    ("cc", 0, "apple pie old recipe"),
+]
+# cc re-sent: its old turn is tombstoned
+STREAM_B1 = [
+    ("cc", 0, "apple pie new recipe"),
+    ("cd", 0, "rotten cat toy"),
+]
+
+
+def test_tombstoned_streaming_bm25_jobs(spark, tmp_path):
+    d = str(tmp_path / "sidx")
+    for b, rows in enumerate([STREAM_B0, STREAM_B1]):
+        ingest_batch(
+            spark.createDataFrame(rows, "conv_id string, turn_idx int, text string"),
+            d, b, stem=False, positional=True, docs_per_segment=2,
+        )
+    idx = load_streaming_index(spark, d)
+    assert idx.tombstones is not None
+    for q in (["apple", "rotten"], ["cat", "pie"]):
+        rows, n = _jobs_of(spark, lambda: Q.search_bm25(idx, q, 5).collect())
+        assert rows and 2 not in {r["doc_id"] for r in rows}
+        assert n <= 4, (q, n)
